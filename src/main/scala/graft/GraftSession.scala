@@ -84,6 +84,12 @@ object GraftSession {
       // at execution, not capture, time).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (4 * 1024 * 1024).toString)
+      // every per-query rank cut (Ann.twoPhaseCut) relies on the
+      // map-side WindowGroupLimit Spark infers only for cuts up to this
+      // threshold; Spark's default (1000) sits below the IVF-PQ refine
+      // depth, the deepest cut the engine plans
+      .config("spark.sql.optimizer.windowGroupLimitThreshold",
+        graft.operators.Ann.PqRerankDepth.toString)
       // wide-but-legitimate expression trees (e.g. v8's 64-component
       // embed array) otherwise spam truncation warnings into the log
       .config("spark.sql.debug.maxToStringFields", "2000")

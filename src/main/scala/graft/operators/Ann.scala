@@ -35,11 +35,6 @@ object Ann {
   val querySet: Seq[(Int, Seq[Double])] =
     (0 until NumQueries).map(i => i -> VectorSearch.qvec(10 + i))
 
-  private def queriesDf(s: SparkSession): DataFrame = {
-    import s.implicits._
-    querySet.toDF("query_id", "qv")
-  }
-
   private def sqlValues(rows: Seq[String]): String = rows.mkString(", ")
 
   private def queriesValuesSql: String =
@@ -47,71 +42,70 @@ object Ann {
       s"($i, ${VectorSearch.sqlArray(v)}::DOUBLE[])"
     })
 
+  /** The per-query rank cut every probe surface shares (a1/a2/a3/a4/
+    * vq3/vq4 and [[refineStage]]): keep the first `cut` rows per
+    * query_id under the total (`scoreCol`, vec_id) order.
+    *
+    * It runs in two phases, both planned by Spark from the one
+    * `row_number() <= cut` rank: a map-side `WindowGroupLimit` Partial
+    * keeps ≤ `cut` rows per (query, scan partition) BELOW the
+    * per-query exchange, and the Final limit + window rank the
+    * ≤ partitions×cut×nq survivors per query. The exchange volume is
+    * therefore independent of corpus size — the probed set (a constant
+    * fraction of the corpus at any fixed probe width) never funnels
+    * into one task per query. Spark plans the Partial only while
+    * `cut` ≤ `spark.sql.optimizer.windowGroupLimitThreshold`, so the
+    * cut is refused above it rather than served without the partial
+    * limit. The ordering is total, so the result is the same under any
+    * partitioning. */
+  private[graft] def twoPhaseCut(cand: DataFrame, scoreCol: String,
+      cut: Int): DataFrame = {
+    val limitConf = "spark.sql.optimizer.windowGroupLimitThreshold"
+    val threshold = cand.sparkSession.conf.get(limitConf).toInt
+    require(cut <= threshold,
+      s"rank cut $cut exceeds $limitConf=$threshold: Spark would plan no " +
+        "map-side partial limit, and every probed candidate row would " +
+        "cross the per-query exchange")
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(scoreCol), col("vec_id"))
+    cand
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= cut)
+      .drop("rn")
+  }
+
+  /** The answer of a probe surface: [[twoPhaseCut]] at k on (query_id,
+    * vec_id, score) rows, in (query_id, score, vec_id) order. At most
+    * k rows survive per query, so the sort is bounded by k·nq and plans
+    * as one `TakeOrderedAndProject` — no range-partition sampling job,
+    * no sort exchange — and the limit never truncates. */
+  private[graft] def topKPerQuery(cand: DataFrame, k: Int,
+      nq: Int): DataFrame =
+    twoPhaseCut(cand, "score", k)
+      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      .limit(k * nq)
+
   // ---------------------------------------------------------------- a1
 
-  /** a1: exact batch knn — every query against the full corpus, in two
-    * phases. The query set is broadcast (small by construction); the
-    * corpus is scanned once with scores in whole-stage codegen. Phase 1
-    * ranks per (query, SCAN PARTITION) — no shuffle, every core keeps
-    * its own top-k per query — so at most partitions×k×nq pruned
-    * triples reach the exchange. Phase 2 ranks the survivors per query.
-    * A single global rank per query would funnel nq×n rows through nq
-    * reducer partitions — 5 active reducers on a 1000-executor cluster;
-    * the partial phase makes reduction volume independent of corpus
-    * size, the same shape `TakeOrderedAndProject` gives single-query
-    * knn. */
-  def batchKnn(embs: DataFrame, queries: DataFrame, k: Int = K): DataFrame = {
-    val scored = embs.join(broadcast(queries))
-      .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
-      .select(col("query_id"), col("vec_id"), col("score"))
-    val wLocal = Window.partitionBy(col("query_id"), col("pid"))
-      .orderBy(col("score"), col("vec_id"))
-    val wGlobal = Window.partitionBy(col("query_id"))
-      .orderBy(col("score"), col("vec_id"))
-    scored
-      .withColumn("pid", spark_partition_id()) // materialized pre-shuffle
-      .withColumn("prn", row_number().over(wLocal))
-      .filter(col("prn") <= k)
-      .withColumn("rn", row_number().over(wGlobal))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("score"))
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+  /** a1: exact batch knn — every query against the full corpus. The
+    * query set is broadcast (small by construction); the corpus is
+    * scanned once with scores in whole-stage codegen, and
+    * [[topKPerQuery]]'s map-side partial limit leaves at most
+    * partitions×k×nq rows to cross the per-query exchange. */
+  def batchKnn(embs: DataFrame,
+      queryVecs: Seq[(Int, Seq[Double])] = querySet, k: Int = K)
+      (implicit s: SparkSession): DataFrame = {
+    import s.implicits._
+    topKPerQuery(
+      embs.join(broadcast(queryVecs.toDF("query_id", "qv")))
+        .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
+        .select(col("query_id"), col("vec_id"), col("score")),
+      k, queryVecs.size)
   }
 
   def a1Query(s: SparkSession, d: String): DataFrame = {
     vectors.register(s)
-    batchKnn(Tables.embeddings(s, d), queriesDf(s))
-  }
-
-  /** [[batchKnn]]'s two-phase per-query rank cut, shared by every
-    * probe-scan surface (a2/a3/a4/vq3/vq4). `cand` must carry
-    * (query_id, vec_id, `scoreCol`) straight out of the map-side
-    * probe stage (scan + broadcast join + scored projection — no
-    * exchange yet), so `spark_partition_id()` materializes the SCAN
-    * partition. Phase 1 ranks per (query, scan partition): the probed
-    * candidate set — a constant FRACTION of the corpus under any
-    * fixed probe width — is cut to `cut` rows per (query, partition)
-    * across a WIDE exchange of nq×partitions keys, instead of
-    * funneling every probed row into one task per query (5 active
-    * reducers on a 1000-executor cluster). Phase 2 ranks the
-    * ≤ partitions×cut×nq survivors per query — reduction volume
-    * independent of corpus size. The (score, vec_id) ordering is
-    * total, so the two-phase result is bit-identical to a single
-    * global rank. */
-  private[graft] def twoPhaseCut(cand: DataFrame, scoreCol: String,
-      cut: Int): DataFrame = {
-    val wLocal = Window.partitionBy(col("query_id"), col("pid"))
-      .orderBy(col(scoreCol), col("vec_id"))
-    val wGlobal = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol), col("vec_id"))
-    cand
-      .withColumn("pid", spark_partition_id()) // materialized pre-shuffle
-      .withColumn("prn", row_number().over(wLocal))
-      .filter(col("prn") <= cut)
-      .drop("pid", "prn")
-      .withColumn("rn", row_number().over(wGlobal))
-      .filter(col("rn") <= cut)
-      .drop("rn")
+    batchKnn(Tables.embeddings(s, d))(s)
   }
 
   // ---------------------------------------------------------------- a2
@@ -183,12 +177,11 @@ object Ann {
       probeBucketsByMargin(v).take(probes).map(pb => (i, pb, v))
     }.toDF("query_id", "qbucket", "qv")
     val bucketed = embs.withColumn("bkt", bucketCol(col("embedding")))
-    twoPhaseCut(
+    topKPerQuery(
       bucketed.join(broadcast(queries), col("bkt") === col("qbucket"))
         .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
         .select(col("query_id"), col("vec_id"), col("score")),
-      "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      k, querySet.size)
   }
 
   def a2Query(s: SparkSession, d: String): DataFrame = {
@@ -266,13 +259,12 @@ object Ann {
     val allProbes = queryVecs.flatMap { case (_, v) =>
       probeBucketsByMargin(v).take(probes)
     }.distinct
-    twoPhaseCut(
+    topKPerQuery(
       idx.filter(col("bkt").isin(allProbes: _*))
         .join(broadcast(queries), col("bkt") === col("qbucket"))
         .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
         .select(col("query_id"), col("vec_id"), col("score")),
-      "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      k, queryVecs.size)
   }
 
   // ---------------------------------------------------------------- a3
@@ -452,12 +444,11 @@ object Ann {
         .map { case (_, cid, _) => (i, cid, qv) }
     }.toDF("query_id", "pcid", "qv")
 
-    twoPhaseCut(
+    topKPerQuery(
       assigned.join(broadcast(probes), col("cid") === col("pcid"))
         .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
         .select(col("query_id"), col("vec_id"), col("score")),
-      "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      k, querySet.size)
   }
 
   def a3Query(s: SparkSession, d: String): DataFrame = {
@@ -530,13 +521,12 @@ object Ann {
       }
     val probes = probePairs.toDF("query_id", "pcid", "qv")
     val probedCells = probePairs.map(_._2).distinct
-    twoPhaseCut(
+    topKPerQuery(
       idx.filter(col("cid").isin(probedCells: _*))
         .join(broadcast(probes), col("cid") === col("pcid"))
         .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
         .select(col("query_id"), col("vec_id"), col("score")),
-      "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      k, queryVecs.size)
   }
 
   // --------------------------------- a3 delete propagation (r18)
@@ -569,7 +559,7 @@ object Ann {
 
   /** a3_indexed's serve with deletions honored: the partition-pruned
     * probe scan anti-joins the bounded tombstone set BEFORE the
-    * two-phase rank, so deleted vectors can never occupy a top-k slot
+    * per-query rank, so deleted vectors can never occupy a top-k slot
     * (the k-th rank refills from the live candidates — unlike a
     * post-filter on the old top-k, which would silently return k−|del|
     * rows). Without a sidecar this IS [[indexedIvfKnn]]. */
@@ -593,12 +583,11 @@ object Ann {
     val probedCells = probePairs.map(_._2).distinct
     val live = graft.sources.Tombstones.filterLive(s, dir, "vec_id")(
       idx.filter(col("cid").isin(probedCells: _*)))
-    twoPhaseCut(
+    topKPerQuery(
       live.join(broadcast(probes), col("cid") === col("pcid"))
         .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
         .select(col("query_id"), col("vec_id"), col("score")),
-      "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      k, querySet.size)
   }
 
   /** Fold vector tombstones physically (cell-aligned rewrite; serve
@@ -766,25 +755,23 @@ object Ann {
     * re-joined from the broadcast query table here — the rank
     * exchange upstream carries only (query_id, vec_id, score). The
     * refine read is a vec_id point join inside probed cells —
-    * candidate-bounded, never a corpus scan, so the single per-query
-    * rank window is fine (≤ RerankDepth rows per partition). */
+    * candidate-bounded, never a corpus scan — and [[topKPerQuery]]
+    * bounds its exchange by the partial limit and its final sort by
+    * k·nq rows. */
   private def refineStage(s: SparkSession, d: String, cand: DataFrame,
       queryVecs: Seq[(Int, Seq[Double])], probedCells: Seq[Long],
       k: Int): DataFrame = {
     import s.implicits._
     val queries = queryVecs.toDF("query_id", "qv")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score"), col("vec_id"))
-    Tables.loadLayout(s, ensureIvfIndex(s, d))
-      .filter(col("cid").isin(probedCells: _*))
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
-      .select(col("query_id"), col("vec_id"), col("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+    topKPerQuery(
+      Tables.loadLayout(s, ensureIvfIndex(s, d))
+        .filter(col("cid").isin(probedCells: _*))
+        .select(col("vec_id"), col("embedding"))
+        .join(broadcast(cand), Seq("vec_id"))
+        .join(broadcast(queries), Seq("query_id"))
+        .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
+        .select(col("query_id"), col("vec_id"), col("score")),
+      k, queryVecs.size)
   }
 
   // ------------------------------------------------------- vq4: IVF-PQ

@@ -251,16 +251,16 @@ object RpTree {
     }.toDF("query_id", "pleaf", "qv")
   }
 
-  /** Per-query top-k over probed-leaf candidates via [[Ann.twoPhaseCut]]
-    * — the pid-local prefilter keeps the probed set (a constant corpus
-    * fraction) from funneling into one task per query. */
-  private def topkPerQuery(cand: DataFrame, k: Int): DataFrame =
-    Ann.twoPhaseCut(
+  /** Per-query top-k over probed-leaf candidates via
+    * [[Ann.topKPerQuery]]: the map-side partial limit keeps the probed
+    * set (a constant corpus fraction) from funneling into one task per
+    * query, and the final sort is bounded by k·nq rows. */
+  private def topkPerQuery(cand: DataFrame, k: Int, nq: Int): DataFrame =
+    Ann.topKPerQuery(
       cand
         .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
         .select(col("query_id"), col("vec_id"), col("score")),
-      "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      k, nq)
 
   /** a4: scan-side RP-tree search — assign leaves on the fly (pure
     * map), broadcast-join the probe pairs, exact cosine inside probed
@@ -272,7 +272,7 @@ object RpTree {
     val assigned = assignLeaf(Tables.embeddings(s, d), thr)
     topkPerQuery(
       assigned.join(broadcast(probesDf(s, thr, maxFlips)),
-        col("leaf") === col("pleaf")), k)
+        col("leaf") === col("pleaf")), k, Ann.querySet.size)
   }
 
   // ----------------------------------------------------------- index
@@ -317,7 +317,7 @@ object RpTree {
     topkPerQuery(
       idx.filter(col("leaf").isin(allProbes: _*))
         .join(broadcast(probesDf(s, thr, maxFlips, queryVecs)),
-          col("leaf") === col("pleaf")), k)
+          col("leaf") === col("pleaf")), k, queryVecs.size)
   }
 
   // ---------------------------------------------------------- oracle

@@ -17,11 +17,14 @@ object LocalIndex {
     * corpus path keeps the name readable; the appended hash of the RAW
     * path keeps distinct corpora distinct — `/data/a` and `/data_a`
     * sanitize to the same text and would otherwise collide onto one
-    * directory, thrashing rebuilds on every alternation. */
+    * directory, thrashing rebuilds on every alternation. The leaf
+    * starts with `c`: an absolute path sanitizes to a leading `_`,
+    * and Spark treats `_`- and `.`-prefixed paths as hidden (every
+    * layout read would log that all its paths were ignored). */
   def path(kind: String, d: String, suffix: String): String =
     new java.io.File(
       sys.props("java.io.tmpdir"),
-      s"graft-$kind/" + d.replaceAll("[^A-Za-z0-9._-]", "_") +
+      s"graft-$kind/c" + d.replaceAll("[^A-Za-z0-9._-]", "_") +
         f"_${d.hashCode & 0xffffffffL}%08x" + suffix).getPath
 
   /** Fingerprint of source files on disk (names, lengths, mtimes):

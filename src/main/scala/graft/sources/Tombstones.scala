@@ -92,16 +92,41 @@ object Tombstones {
     * a per-read dedup exchange was pure overhead on every serve and
     * every registration's prior-read. A delete gate reads the sidecar
     * ~5× per run (pinned-set read, one prior-read per serving copy,
-    * the serve's anti-join), so both savings multiply. */
+    * the serve's anti-join), so both savings multiply.
+    *
+    * A supplied schema whose column the files lack reads as all-null
+    * keys, and an anti-join against null keys hides nothing — deleted
+    * rows would come back. So the sidecar's own column is checked
+    * first, from one part-file footer on the driver (no Spark job),
+    * and a `keyCol` that is not it fails loudly. */
   def read(s: SparkSession, layoutDir: String, keyCol: String): Option[DataFrame] = {
     val p = path(layoutDir)
-    if (new java.io.File(p, "_SUCCESS").exists())
+    if (new java.io.File(p, "_SUCCESS").exists()) {
+      val stored = storedKeyCol(s, p)
+      require(stored.forall(_ == keyCol),
+        s"tombstone sidecar $p is keyed by ${stored.get}, not $keyCol")
       Some(s.read.schema(org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField(
             keyCol, org.apache.spark.sql.types.LongType))))
         .parquet(p))
-    else None
+    } else None
   }
+
+  /** The key column [[write]] persisted in the sidecar, read from the
+    * footer of one of its part files; None for a sidecar without part
+    * files. */
+  private def storedKeyCol(s: SparkSession, sidecar: String): Option[String] =
+    Option(new java.io.File(sidecar).listFiles()).toSeq.flatten
+      .find(f => f.isFile && f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getAbsolutePath),
+            s.sparkContext.hadoopConfiguration))
+        try r.getFileMetaData.getSchema.getFields.get(0).getName
+        finally r.close()
+      }
 
   /** Hide deleted keys from a (pruned) scan: bounded broadcast
     * anti-join; identity when no delete was ever registered. */

@@ -585,20 +585,44 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("ANN probe scans rank via the two-phase cut: pid-local prefilter before the per-query exchange") {
-    // every probe-scan surface must carry batchKnn's shape: a
-    // row_number window keyed by (query_id, SPARK_PARTITION_ID)
-    // cutting each scan partition's candidates BEFORE the per-query
-    // exchange — a single global per-query rank would funnel a
-    // corpus-proportional probed set into nq tasks at 100 TB
-    Seq("a1_batch_knn", "a2_lsh_ann", "a2_indexed", "a3_ivf_ann",
-      "a3_indexed", "a4_rptree", "a4_indexed", "vq3_ivf_i8",
-      "vq4_ivfpq").foreach { q =>
-      withClue(q) {
-        val p = plan(q)
-        p should include("SPARK_PARTITION_ID") // pid materialized map-side
-        "row_number".r.findAllIn(p).size should be >= 2 // local + global rank
-      }
+    // every probe-scan surface must cut each scan partition's
+    // candidates BEFORE the per-query exchange — a single global
+    // per-query rank would funnel a corpus-proportional probed set into
+    // nq tasks at 100 TB — and end in a k·nq-bounded sort, never a
+    // range-partitioned one (a sampling job plus a shuffle per request)
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    def partialBelow(p: SparkPlan): Boolean = p match {
+      case w: WindowGroupLimitExec if w.mode == Partial => true
+      case _: Exchange => false
+      case other => other.children.exists(partialBelow)
     }
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      Seq("a1_batch_knn", "a2_lsh_ann", "a2_indexed", "a3_ivf_ann",
+        "a3_indexed", "a4_rptree", "a4_indexed", "vq3_ivf_i8",
+        "vq4_ivfpq").foreach { q =>
+        withClue(q) {
+          val exec = SparkEntry.queries(q)(spark, SparkSpec.TinySf)
+            .queryExecution.executedPlan
+          val rankEx = exec.collect { case e: ShuffleExchangeExec =>
+            e.outputPartitioning match {
+              case h: HashPartitioning
+                  if h.expressions.map(_.references.map(_.name).toSeq) ==
+                    Seq(Seq("query_id")) => Some(e)
+              case _ => None
+            }
+          }.flatten
+          rankEx should not be empty
+          rankEx.foreach(e => assert(partialBelow(e.child), e.toString))
+          exec.toString.toLowerCase should not include "rangepartitioning"
+          exec.toString should include("TakeOrderedAndProject")
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("vq3/vq4 rank exchanges carry no query vector (narrow (query_id, vec_id, qscore) rows)") {
@@ -677,10 +701,10 @@ class PlanAuditSpec extends SparkSpec {
     t8c should include("LeftAnti")
     t8c should not include "SortMergeJoin"
     // a3_delete_ann keeps the partition-pruned probe scan and the
-    // two-phase rank cut (SPARK_PARTITION_ID prefilter)
+    // map-side partial rank cut
     val a3d = plan("a3_delete_ann")
     a3d should include("LeftAnti")
-    a3d should include("SPARK_PARTITION_ID")
+    a3d should include regex "WindowGroupLimit .*Partial"
     a3d should not include "SortMergeJoin"
   }
 }

@@ -35,8 +35,7 @@ class AnnSpec extends SparkSpec {
   test("batchKnn: exact corpus copy of each query ranks first with score ~0") {
     vectors.register(spark)
     val embs = corpus(100)
-    val queries = Ann.querySet.toDF("query_id", "qv")
-    val out = Ann.batchKnn(embs, queries).collect()
+    val out = Ann.batchKnn(embs, Ann.querySet)(spark).collect()
     val byQuery = out.groupBy(_.getAs[Int]("query_id"))
     byQuery should have size Ann.NumQueries.toLong
     byQuery.foreach { case (q, rows) =>

@@ -195,6 +195,60 @@ class InvertedIndexSpec extends SparkSpec {
     all(got.values.map(_._2)) should be > 0.0
   }
 
+  test("bm25 corpus constants are recomputed when documents are regenerated in place; the t9 oracle replays the plan's") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-invidx-").toString
+    val needle = Seq("table", "value")
+    // driver-side (idf by term, avgdl) of a corpus, the statsFor formula
+    def expected(rows: Seq[(Long, String)]): (Map[String, Double], Double) = {
+      val toks = rows.map(_._2.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq)
+      val n = toks.size
+      (needle.map { t =>
+        val df = toks.count(_.contains(t))
+        t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+      }.toMap, toks.map(_.size).sum.toDouble / n)
+    }
+    def served(): (Map[String, Double], Double) = {
+      val plan = InvertedIndex.bm25Indexed(spark, dir, needle)
+      plan.collect()
+      val (idf, avgdl) = InvertedIndex.statsFor(spark, dir, needle)
+      val planLits = plan.queryExecution.analyzed.flatMap(_.expressions
+        .flatMap(_.collect {
+          case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, _) => v
+        }))
+      planLits should contain(avgdl)
+      val oracle = InvertedIndex.oracleT9For(dir, needle)
+      oracle should include(s"/ $avgdl)")
+      idf.values.foreach(v => oracle should include(s"THEN $v "))
+      (idf, avgdl)
+    }
+    writeDocs(dir, docs)
+    val before = served()
+    before shouldBe expected(docs)
+    val grown = docs ++ Seq(
+      6L -> "table table value of a much longer document than the others",
+      7L -> "short")
+    writeDocs(dir, grown) // same dir, new bytes
+    val after = served()
+    after shouldBe expected(grown)
+    after._2 should not be before._2
+  }
+
+  test("tombstone read under a key column other than the sidecar's fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-invidx-").toString
+    writeDocs(dir, docs)
+    val idxDir = InvertedIndex.ensureIndex(spark, dir)
+    InvertedIndex.tombstoneDocs(spark, idxDir, Seq(1L))
+    val e = intercept[IllegalArgumentException](
+      graft.sources.Tombstones.read(spark, idxDir, "vec_id"))
+    e.getMessage should include("doc_id")
+    // the live filter must not turn into a silent no-op either
+    intercept[IllegalArgumentException](
+      graft.sources.Tombstones.filterLive(spark, idxDir, "vec_id")(
+        spark.range(3).toDF("vec_id")))
+    graft.sources.Tombstones.read(spark, idxDir, "doc_id").get
+      .collect().map(_.getLong(0)) shouldBe Array(1L)
+  }
+
   test("grow-only corpus appends just the new shard's postings") {
     val dir = java.nio.file.Files.createTempDirectory("graft-invidx-").toString
     writeDocs(dir, docs)
