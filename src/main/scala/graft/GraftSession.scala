@@ -84,7 +84,7 @@ object GraftSession {
       // at execution, not capture, time).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (4 * 1024 * 1024).toString)
-      // every per-query rank cut (Ann.twoPhaseCut) relies on the
+      // every multi-query rank cut (Ann.twoPhaseCut) relies on the
       // map-side WindowGroupLimit Spark infers only for cuts up to this
       // threshold; Spark's default (1000) sits below the IVF-PQ refine
       // depth, the deepest cut the engine plans

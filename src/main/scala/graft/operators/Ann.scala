@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,8 +18,8 @@ import graft.functions.vectors
   *  - a2: random-hyperplane LSH — corpus bucketed by sign bits of P
   *    fixed hyperplane projections; a query only scans its bucket. The
   *    100 TB scale path: bucket assignment is a pure map over the scan,
-  *    the probe is a bucket-key join, candidate count ∝ bucket
-  *    occupancy, never corpus².
+  *    the probe is a bucket-key lookup in a plan literal, candidate
+  *    count ∝ bucket occupancy, never corpus².
   *  - a3: IVF — corpus assigned to its nearest coarse centroid (pure
   *    per-row expression argmin over the broadcast centroid set, no
   *    shuffle), queries probe the nprobe nearest cells.
@@ -44,46 +46,77 @@ object Ann {
 
   /** The per-query rank cut every probe surface shares (a1/a2/a3/a4/
     * vq3/vq4 and [[refineStage]]): keep the first `cut` rows per
-    * query_id under the total (`scoreCol`, vec_id) order.
+    * query_id under the total (`scoreCol`, vec_id) order. `nq` is the
+    * number of distinct query_ids in `cand`, and it picks the plan.
+    * Both plans run in two phases, a per-scan-partition cut and a
+    * merge of its ≤ partitions×cut×nq survivors, so the probed set (a
+    * constant fraction of the corpus at any fixed probe width) never
+    * funnels whole into one task. The ordering is total, so the result
+    * is the same under any partitioning.
     *
-    * It runs in two phases, both planned by Spark from the one
-    * `row_number() <= cut` rank: a map-side `WindowGroupLimit` Partial
-    * keeps ≤ `cut` rows per (query, scan partition) BELOW the
-    * per-query exchange, and the Final limit + window rank the
-    * ≤ partitions×cut×nq survivors per query. The exchange volume is
-    * therefore independent of corpus size — the probed set (a constant
-    * fraction of the corpus at any fixed probe width) never funnels
-    * into one task per query. Spark plans the Partial only while
-    * `cut` ≤ `spark.sql.optimizer.windowGroupLimitThreshold`, so the
-    * cut is refused above it rather than served without the partial
-    * limit. The ordering is total, so the result is the same under any
-    * partitioning. */
+    *  - nq = 1: `orderBy(scoreCol, vec_id).limit(cut)`, planned as a
+    *    `TakeOrderedAndProject`: a top-`cut` per partition, then one
+    *    merge of ≤ partitions×cut rows — one job, no exchange. Spark
+    *    plans it only while `cut` < `topKSortFallbackThreshold` (above
+    *    it, a range-partitioned global sort), so the cut is refused
+    *    there. Its output is in (`scoreCol`, vec_id) order.
+    *  - nq > 1: one `row_number() <= cut` rank per query_id. Spark
+    *    plans a map-side `WindowGroupLimit` Partial that keeps ≤ `cut`
+    *    rows per (query, scan partition) BELOW the per-query exchange,
+    *    and the Final limit + window rank the survivors. Spark plans
+    *    the Partial only while `cut` ≤ `windowGroupLimitThreshold`, so
+    *    the cut is refused above it. */
   private[graft] def twoPhaseCut(cand: DataFrame, scoreCol: String,
-      cut: Int): DataFrame = {
-    val limitConf = "spark.sql.optimizer.windowGroupLimitThreshold"
-    val threshold = cand.sparkSession.conf.get(limitConf).toInt
-    require(cut <= threshold,
-      s"rank cut $cut exceeds $limitConf=$threshold: Spark would plan no " +
-        "map-side partial limit, and every probed candidate row would " +
-        "cross the per-query exchange")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol), col("vec_id"))
-    cand
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= cut)
-      .drop("rn")
+      cut: Int, nq: Int): DataFrame = {
+    def refuseAbove(conf: String, ok: Int => Boolean, plan: String): Unit = {
+      val threshold = cand.sparkSession.conf.get(conf).toInt
+      require(ok(threshold), s"rank cut $cut over $nq queries exceeds " +
+        s"$conf=$threshold: Spark would plan $plan")
+    }
+    if (nq == 1) {
+      refuseAbove("spark.sql.execution.topKSortFallbackThreshold",
+        cut < _, "a range-partitioned global sort of every probed row")
+      cand.orderBy(col(scoreCol), col("vec_id")).limit(cut)
+    } else {
+      refuseAbove("spark.sql.optimizer.windowGroupLimitThreshold",
+        cut <= _, "no map-side partial limit, and every probed " +
+          "candidate row would cross the per-query exchange")
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col(scoreCol), col("vec_id"))
+      cand
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= cut)
+        .drop("rn")
+    }
   }
 
   /** The answer of a probe surface: [[twoPhaseCut]] at k on (query_id,
-    * vec_id, score) rows, in (query_id, score, vec_id) order. At most
-    * k rows survive per query, so the sort is bounded by k·nq and plans
-    * as one `TakeOrderedAndProject` — no range-partition sampling job,
-    * no sort exchange — and the limit never truncates. */
+    * vec_id, score) rows, in (query_id, score, vec_id) order. For one
+    * query the cut's own `TakeOrderedAndProject` is already that
+    * order. Otherwise at most k rows survive per query, so the sort is
+    * bounded by k·nq and plans as one more `TakeOrderedAndProject` — no
+    * range-partition sampling job, no sort exchange — and the limit
+    * never truncates. */
   private[graft] def topKPerQuery(cand: DataFrame, k: Int,
-      nq: Int): DataFrame =
-    twoPhaseCut(cand, "score", k)
-      .orderBy(col("query_id"), col("score"), col("vec_id"))
+      nq: Int): DataFrame = {
+    val cut = twoPhaseCut(cand, "score", k, nq)
+    if (nq == 1) cut
+    else cut.orderBy(col("query_id"), col("score"), col("vec_id"))
       .limit(k * nq)
+  }
+
+  /** A probe scan's candidate rows: every `scan` row expanded into one
+    * row per query probing its partition key `key` (IVF cell, LSH
+    * bucket, RP-tree leaf), carrying that query's `payload`. `probes`
+    * maps each probed key to its (query_id, payload) pairs and rides
+    * the plan as a literal (the c14 dictGet shape), read with
+    * `inline(element_at(map, key))`: no driver-side `LocalRelation` to
+    * broadcast, so no broadcast job. A key no query probes yields no
+    * row. */
+  private[operators] def probeRows[K: TypeTag, P: TypeTag](scan: DataFrame,
+      key: Column, payload: String, probes: Map[K, Seq[(Int, P)]]): DataFrame =
+    scan.select(col("*"),
+      inline(element_at(typedlit(probes), key)).as(Seq("query_id", payload)))
 
   // ---------------------------------------------------------------- a1
 
@@ -160,29 +193,38 @@ object Ann {
     b +: flips
   }
 
+  /** LSH probe literal for [[probeRows]]: each query's first `probes`
+    * buckets of [[probeBucketsByMargin]] → (query_id, qv). */
+  private def bucketProbes(queryVecs: Seq[(Int, Seq[Double])],
+      probes: Int): Map[Int, Seq[(Int, Seq[Double])]] =
+    queryVecs.flatMap { case (i, v) =>
+      probeBucketsByMargin(v).take(probes).map(pb => pb -> (i, v))
+    }.groupMap(_._1)(_._2)
+
+  /** Exact cosine of each probed row against its query, then
+    * [[topKPerQuery]]: the tail of the LSH (a2) and RP-tree (a4)
+    * surfaces. */
+  private[operators] def cosineTopK(probed: DataFrame, k: Int, nq: Int): DataFrame =
+    topKPerQuery(
+      probed.select(col("query_id"), col("vec_id"),
+        vectors.cosineDistance(col("embedding"), col("qv")).as("score")),
+      k, nq)
+
   /** a2: LSH-bucketed ANN with multi-probe. Corpus bucket assignment is
-    * a pure map (P codegen'd dot products per row); each query joins
+    * a pure map (P codegen'd dot products per row); each query probes
     * its own bucket PLUS the P Hamming-1 probe buckets (~(P+1)·n/2^P of
     * the corpus), then exact cosine + top-k inside the probed set.
-    * Queries carry driver-precomputed probe buckets, so the probe is
-    * still a single broadcast equi-join on the bucket key — multi-probe
-    * buys back the recall a single-bucket LSH loses near plane
-    * boundaries without changing the plan shape. A vector has exactly
-    * one bucket and probe values are distinct, so no candidate dedup is
-    * needed. */
+    * Probe buckets are driver-precomputed, so the probe stays one
+    * [[probeRows]] lookup on the bucket key — multi-probe buys back the
+    * recall a single-bucket LSH loses near plane boundaries without
+    * changing the plan shape. A vector has exactly one bucket and probe
+    * values are distinct, so no candidate dedup is needed. */
   def lshKnn(embs: DataFrame, k: Int = K,
-      probes: Int = NumPlanes + 1)(implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    val queries = querySet.flatMap { case (i, v) =>
-      probeBucketsByMargin(v).take(probes).map(pb => (i, pb, v))
-    }.toDF("query_id", "qbucket", "qv")
-    val bucketed = embs.withColumn("bkt", bucketCol(col("embedding")))
-    topKPerQuery(
-      bucketed.join(broadcast(queries), col("bkt") === col("qbucket"))
-        .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
+      probes: Int = NumPlanes + 1)(implicit s: SparkSession): DataFrame =
+    cosineTopK(
+      probeRows(embs.withColumn("bkt", bucketCol(col("embedding"))),
+        col("bkt"), "qv", bucketProbes(querySet, probes)),
       k, querySet.size)
-  }
 
   def a2Query(s: SparkSession, d: String): DataFrame = {
     vectors.register(s)
@@ -243,27 +285,17 @@ object Ann {
     * constant, so the `isin` lands in the scan's PartitionFilters
     * (verified in AnnSpec): only the ~nq·(P+1) probed directories are
     * read — ~1/2^P of the corpus per probe — and no bucket is
-    * recomputed. The broadcast equi-join then splits the pruned rows
+    * recomputed. The [[probeRows]] literal then splits the pruned rows
     * among the queries probing them. `probes`/`queries` are
     * per-request knobs (SearchCli `--probes`); defaults reproduce the
-    * gated a2_indexed plan exactly. */
+    * gated a2_indexed result exactly. */
   def indexedLshKnn(s: SparkSession, d: String, k: Int = K,
       probes: Int = NumPlanes + 1,
       queryVecs: Seq[(Int, Seq[Double])] = querySet): DataFrame = {
-    import s.implicits._
     vectors.register(s)
-    val idx = s.read.parquet(ensureLshIndex(s, d))
-    val queries = queryVecs.flatMap { case (i, v) =>
-      probeBucketsByMargin(v).take(probes).map(pb => (i, pb, v))
-    }.toDF("query_id", "qbucket", "qv")
-    val allProbes = queryVecs.flatMap { case (_, v) =>
-      probeBucketsByMargin(v).take(probes)
-    }.distinct
-    topKPerQuery(
-      idx.filter(col("bkt").isin(allProbes: _*))
-        .join(broadcast(queries), col("bkt") === col("qbucket"))
-        .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
+    cosineTopK(
+      probeIndex(Tables.loadLayout(s, ensureLshIndex(s, d)), "bkt", "qv",
+        bucketProbes(queryVecs, probes)),
       k, queryVecs.size)
   }
 
@@ -431,25 +463,44 @@ object Ann {
     * NProbe nearest cells; exact distance only inside probed cells. */
   def ivfKnn(embs: DataFrame, cents: Seq[(Long, Seq[Double])], k: Int,
              nprobe: Int = NProbe)
-            (implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    val assigned = embs.withColumn("cid", nearestCentroid(cents, col("embedding")))
-
-    def l2(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val probes = querySet.flatMap { case (i, qv) =>
-      cents.map { case (cid, cv) => (i, cid, l2(qv, cv)) }
-        .sortBy { case (_, cid, dd) => (dd, cid) }
-        .take(nprobe)
-        .map { case (_, cid, _) => (i, cid, qv) }
-    }.toDF("query_id", "pcid", "qv")
-
-    topKPerQuery(
-      assigned.join(broadcast(probes), col("cid") === col("pcid"))
-        .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
+            (implicit s: SparkSession): DataFrame =
+    l2TopK(
+      probeRows(embs.withColumn("cid", nearestCentroid(cents, col("embedding"))),
+        col("cid"), "qv", cellProbes(cents, querySet, nprobe)((qv, _) => qv)),
       k, querySet.size)
-  }
+
+  /** IVF probe literal for [[probeRows]]: each query's `nprobe` cells
+    * nearest by driver-side L2 over the constant codebook (ties to the
+    * smaller cid) → (query_id, `payload(qv, cid)`). The one probe-set
+    * derivation of every IVF surface and of the vq4 oracle's LUT rows. */
+  private def cellProbes[P](cb: Seq[(Long, Seq[Double])],
+      queryVecs: Seq[(Int, Seq[Double])], nprobe: Int)(
+      payload: (Seq[Double], Long) => P): Map[Long, Seq[(Int, P)]] =
+    queryVecs.flatMap { case (i, qv) =>
+      cb.map { case (cid, cv) =>
+          (cid, math.sqrt(qv.zip(cv).map { case (x, y) => (x - y) * (x - y) }.sum))
+        }
+        .sortBy { case (cid, dd) => (dd, cid) }
+        .take(nprobe)
+        .map { case (cid, _) => cid -> (i, payload(qv, cid)) }
+    }.groupMap(_._1)(_._2)
+
+  /** [[probeRows]] over a persisted layout partitioned by `key`: the
+    * probed keys are a driver constant, so the `isin` lands in the
+    * scan's PartitionFilters and only probed directories are read. */
+  private[operators] def probeIndex[K: TypeTag, P: TypeTag](idx: DataFrame,
+      key: String, payload: String, probes: Map[K, Seq[(Int, P)]]): DataFrame =
+    probeRows(idx.filter(col(key).isin(probes.keys.toSeq: _*)),
+      col(key), payload, probes)
+
+  /** Exact L2 of each probed row against its query vector `qv`, then
+    * [[topKPerQuery]]: the tail of every float IVF surface. */
+  private def l2TopK(probed: DataFrame, k: Int, nq: Int,
+      qv: Column = col("qv")): DataFrame =
+    topKPerQuery(
+      probed.select(col("query_id"), col("vec_id"),
+        vectors.l2Distance(col("embedding"), qv).as("score")),
+      k, nq)
 
   def a3Query(s: SparkSession, d: String): DataFrame = {
     vectors.register(s)
@@ -506,26 +557,10 @@ object Ann {
   def indexedIvfKnn(s: SparkSession, d: String, k: Int = K,
       nprobe: Int = NProbe,
       queryVecs: Seq[(Int, Seq[Double])] = querySet): DataFrame = {
-    import s.implicits._
     vectors.register(s)
-    val cb = codebookFor(s, d)
-    val idx = Tables.loadLayout(s, ensureIvfIndex(s, d))
-    def l2(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val probePairs: Seq[(Int, Long, Seq[Double])] =
-      queryVecs.flatMap { case (i, qv) =>
-        cb.map { case (cid, cv) => (cid, l2(qv, cv)) }
-          .sortBy { case (cid, dd) => (dd, cid) }
-          .take(nprobe)
-          .map { case (cid, _) => (i, cid, qv) }
-      }
-    val probes = probePairs.toDF("query_id", "pcid", "qv")
-    val probedCells = probePairs.map(_._2).distinct
-    topKPerQuery(
-      idx.filter(col("cid").isin(probedCells: _*))
-        .join(broadcast(probes), col("cid") === col("pcid"))
-        .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
+    val byCell = cellProbes(codebookFor(s, d), queryVecs, nprobe)((qv, _) => qv)
+    l2TopK(
+      probeIndex(Tables.loadLayout(s, ensureIvfIndex(s, d)), "cid", "qv", byCell),
       k, queryVecs.size)
   }
 
@@ -565,29 +600,12 @@ object Ann {
     * rows). Without a sidecar this IS [[indexedIvfKnn]]. */
   def indexedIvfKnnLive(s: SparkSession, d: String, k: Int = K,
       nprobe: Int = NProbe): DataFrame = {
-    import s.implicits._
     vectors.register(s)
-    val cb = codebookFor(s, d)
+    val byCell = cellProbes(codebookFor(s, d), querySet, nprobe)((qv, _) => qv)
     val dir = ensureIvfIndex(s, d)
-    val idx = Tables.loadLayout(s, dir)
-    def l2(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val probePairs: Seq[(Int, Long, Seq[Double])] =
-      querySet.flatMap { case (i, qv) =>
-        cb.map { case (cid, cv) => (cid, l2(qv, cv)) }
-          .sortBy { case (cid, dd) => (dd, cid) }
-          .take(nprobe)
-          .map { case (cid, _) => (i, cid, qv) }
-      }
-    val probes = probePairs.toDF("query_id", "pcid", "qv")
-    val probedCells = probePairs.map(_._2).distinct
     val live = graft.sources.Tombstones.filterLive(s, dir, "vec_id")(
-      idx.filter(col("cid").isin(probedCells: _*)))
-    topKPerQuery(
-      live.join(broadcast(probes), col("cid") === col("pcid"))
-        .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
-      k, querySet.size)
+      Tables.loadLayout(s, dir))
+    l2TopK(probeIndex(live, "cid", "qv", byCell), k, querySet.size)
   }
 
   /** Fold vector tombstones physically (cell-aligned rewrite; serve
@@ -708,10 +726,9 @@ object Ann {
       queryVecs: Seq[(Int, Seq[Double])] = querySet,
       rerankDepth: Int = RerankDepth,
       live: Boolean = false): DataFrame = {
-    import s.implicits._
     require(rerankDepth >= k, s"rerankDepth $rerankDepth < k $k")
     vectors.register(s)
-    val cb = codebookFor(s, d)
+    val byCell = cellProbes(codebookFor(s, d), queryVecs, nprobe)((qv, _) => qv)
     val i8Dir = ensureIvfIndexI8(s, d)
     // live = honor registered deletes ([[tombstoneVecsAll]]): filter
     // the rank-stage scan, so deleted vectors never reach a candidate
@@ -722,57 +739,40 @@ object Ann {
     val idx = if (live)
       graft.sources.Tombstones.filterLive(s, i8Dir, "vec_id")(idxRaw)
     else idxRaw
-    def l2(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val probePairs: Seq[(Int, Long, Seq[Double])] =
-      queryVecs.flatMap { case (i, qv) =>
-        cb.map { case (cid, cv) => (cid, l2(qv, cv)) }
-          .sortBy { case (cid, dd) => (dd, cid) }
-          .take(nprobe)
-          .map { case (cid, _) => (i, cid, qv) }
-      }
-    val probes = probePairs.toDF("query_id", "pcid", "qv")
-    val probedCells = probePairs.map(_._2).distinct
     // qv is dropped BEFORE the rank cut: the 64-double query vector
     // would otherwise ride every candidate row through the rank
-    // exchange (~0.5 KB/row of pure ballast); refineStage re-joins it
-    // from the broadcast query table against the ≤ R·nq survivors.
+    // exchange (~0.5 KB/row of pure ballast); refineStage reads it
+    // back from its query literal for the ≤ R·nq survivors.
     val cand = twoPhaseCut(
-      idx.filter(col("cid").isin(probedCells: _*))
-        .join(broadcast(probes), col("cid") === col("pcid"))
-        .withColumn("qscore",
-          vectors.l2DistanceI8(col("qemb"), col("scale"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("qscore")),
-      "qscore", rerankDepth)
+      probeIndex(idx, "cid", "qv", byCell)
+        .select(col("query_id"), col("vec_id"),
+          vectors.l2DistanceI8(col("qemb"), col("scale"), col("qv")).as("qscore")),
+      "qscore", rerankDepth, queryVecs.size)
       .select(col("query_id"), col("vec_id"))
-    refineStage(s, d, cand, queryVecs, probedCells, k)
+    refineStage(s, d, cand, queryVecs, byCell.keys.toSeq, k)
   }
 
   /** The shared float refine stage ([[quantizedIvfKnn]] / [[ivfPqKnn]]):
     * re-score `cand` rows (query_id, vec_id — ≤ RerankDepth per
-    * query, broadcast) exactly against the float IVF index, pruned to
-    * the same probed cells, and keep the top k. The query vector is
-    * re-joined from the broadcast query table here — the rank
-    * exchange upstream carries only (query_id, vec_id, score). The
-    * refine read is a vec_id point join inside probed cells —
-    * candidate-bounded, never a corpus scan — and [[topKPerQuery]]
-    * bounds its exchange by the partial limit and its final sort by
-    * k·nq rows. */
+    * query, broadcast: computed, so it is the one broadcast job) exactly
+    * against the float IVF index, pruned to the same probed cells, and
+    * keep the top k. The query vector is read per row as
+    * `element_at(typedlit(query_id → qv), query_id)` — a plan literal,
+    * so the rank cut upstream carries only (query_id, vec_id, score)
+    * and no query table is broadcast. The refine read is a vec_id
+    * point join inside probed cells — candidate-bounded, never a
+    * corpus scan — and [[topKPerQuery]] bounds its final sort by k·nq
+    * rows. */
   private def refineStage(s: SparkSession, d: String, cand: DataFrame,
       queryVecs: Seq[(Int, Seq[Double])], probedCells: Seq[Long],
-      k: Int): DataFrame = {
-    import s.implicits._
-    val queries = queryVecs.toDF("query_id", "qv")
-    topKPerQuery(
+      k: Int): DataFrame =
+    l2TopK(
       Tables.loadLayout(s, ensureIvfIndex(s, d))
         .filter(col("cid").isin(probedCells: _*))
         .select(col("vec_id"), col("embedding"))
-        .join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .withColumn("score", vectors.l2Distance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
-      k, queryVecs.size)
-  }
+        .join(broadcast(cand), Seq("vec_id")),
+      k, queryVecs.size,
+      qv = element_at(typedlit(queryVecs.toMap), col("query_id")))
 
   // ------------------------------------------------------- vq4: IVF-PQ
 
@@ -935,7 +935,7 @@ object Ann {
     * asymmetric-distance (ADC) ranking over the 8-byte residual
     * codes, and the shared [[refineStage]]. The per-(query, cell)
     * lookup table ([[PqSubspaces]]×[[PqKsub]] driver doubles against
-    * q − c_cell) rides the broadcast probe row it belongs to, so
+    * q − c_cell) rides the [[probeRows]] plan literal under its cell, so
     * ranking a probed row is 16 array lookups + 15 adds in
     * whole-stage codegen over a code 32× narrower than the float
     * vector — at 100 TB the ranking scan reads nprobe/nlist of a
@@ -949,7 +949,6 @@ object Ann {
       queryVecs: Seq[(Int, Seq[Double])] = querySet,
       rerankDepth: Int = PqRerankDepth,
       live: Boolean = false): DataFrame = {
-    import s.implicits._
     require(rerankDepth >= k, s"rerankDepth $rerankDepth < k $k")
     vectors.register(s)
     val cb = codebookFor(s, d)
@@ -961,39 +960,29 @@ object Ann {
     val idx = if (live)
       graft.sources.Tombstones.filterLive(s, pqDir, "vec_id")(idxRaw)
     else idxRaw
-    def l2(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val cmap = cb.toMap
     // residual encoding makes the LUT CELL-specific: the stored code
     // reproduces x − c_cell, so the query side must look up distances
-    // from q − c_cell — one LUT per (query, probed cell), riding the
-    // probe row it belongs to
-    val probePairs: Seq[(Int, Long, Seq[Double], Seq[Seq[Double]])] =
-      queryVecs.flatMap { case (i, qv) =>
-        cb.map { case (cid, cv) => (cid, l2(qv, cv)) }
-          .sortBy { case (cid, dd) => (dd, cid) }
-          .take(nprobe)
-          .map { case (cid, _) =>
-            val qres = qv.zip(cmap(cid)).map { case (x, c) => x - c }
-            (i, cid, qv, pqLut(sub, qres))
-          }
-      }
-    val probes = probePairs.toDF("query_id", "pcid", "qv", "lut")
-    val probedCells = probePairs.map(_._2).distinct
+    // from q − c_cell — one LUT per (query, probed cell)
+    val byCell = cellProbes(cb, queryVecs, nprobe)(pqResidualLut(cb, sub))
     val adc = (0 until PqSubspaces).map(m =>
       element_at(element_at(col("lut"), m + 1),
         col("code").getItem(m) + 1)).reduce(_ + _)
-    // qv (and the LUT) dropped before the rank cut — see
-    // [[quantizedIvfKnn]]: the rank exchange carries only
-    // (query_id, vec_id, qscore); refineStage re-joins qv broadcast.
+    // the LUT is dropped before the rank cut — see [[quantizedIvfKnn]]:
+    // the rank exchange carries only (query_id, vec_id, qscore)
     val cand = twoPhaseCut(
-      idx.filter(col("cid").isin(probedCells: _*))
-        .join(broadcast(probes), col("cid") === col("pcid"))
-        .withColumn("qscore", adc)
-        .select(col("query_id"), col("vec_id"), col("qscore")),
-      "qscore", rerankDepth)
+      probeIndex(idx, "cid", "lut", byCell)
+        .select(col("query_id"), col("vec_id"), adc.as("qscore")),
+      "qscore", rerankDepth, queryVecs.size)
       .select(col("query_id"), col("vec_id"))
-    refineStage(s, d, cand, queryVecs, probedCells, k)
+    refineStage(s, d, cand, queryVecs, byCell.keys.toSeq, k)
+  }
+
+  /** The [[pqLut]] of q − c_cell for a probed (query, cell): the
+    * cell-specific ADC table of the residual codes. */
+  private def pqResidualLut(cb: Seq[(Long, Seq[Double])],
+      sub: Seq[Seq[(Long, Seq[Double])]]): (Seq[Double], Long) => Seq[Seq[Double]] = {
+    val cmap = cb.toMap
+    (qv, cid) => pqLut(sub, qv.zip(cmap(cid)).map { case (x, c) => x - c })
   }
 
   // ------------------------------------------------------------ oracles
@@ -1142,20 +1131,14 @@ object Ann {
     // driver-side probe selects get a row — the SQL-computed qprobe
     // must agree (the shared-argmin parity assumption; a divergence
     // drops the inner join and fails the gate loudly)
-    val cmap = Option(codebooks.get(d)).map(_._2.toMap)
-      .getOrElse(Map.empty[Long, Seq[Double]])
-    def l2d(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val lutRows = querySet.flatMap { case (i, qv) =>
-      cmap.toSeq.map { case (cid, cv) => (cid, l2d(qv, cv)) }
-        .sortBy { case (cid, dd) => (dd, cid) }
-        .take(NProbe)
-        .map { case (cid, _) =>
-          val qres = qv.zip(cmap(cid)).map { case (x, c) => x - c }
-          s"($i, $cid, " + pqLut(sub, qres)
-            .map(l => s"[${l.mkString(", ")}]::DOUBLE[]").mkString(", ") + ")"
-        }
-    }
+    val cb = Option(codebooks.get(d)).map(_._2).getOrElse(Nil)
+    val lutRows = cellProbes(cb, querySet, NProbe)(pqResidualLut(cb, sub))
+      .toSeq.flatMap { case (cid, qs) => qs.map { case (i, lut) => (i, cid, lut) } }
+      .sortBy { case (i, cid, _) => (i, cid) }
+      .map { case (i, cid, lut) =>
+        s"($i, $cid, " + lut
+          .map(l => s"[${l.mkString(", ")}]::DOUBLE[]").mkString(", ") + ")"
+      }
     val lutCols = (0 until PqSubspaces).map(m => s"l$m").mkString(", ")
     val lutValues =
       if (lutRows.nonEmpty) lutRows.mkString(",\n  ")

@@ -784,9 +784,15 @@ object Dedup {
     * has few canonical edges but unboundedly many nodes, so the driver
     * path is additionally gated on the node count — via the same
     * bounded limit-fetch that retrieves the nodes, so the gate can
-    * never itself collect more than its own bound. */
+    * never itself collect more than its own bound. `switchEdges` must
+    * keep both fetch bounds (k+1 edges, 2k+3 nodes) within an Int
+    * limit: a clamped bound would read a truncated fetch as the
+    * complete edge set and label wrong clusters, so it is refused. */
   def dupClustersAuto(pairs: DataFrame,
       switchEdges: Long = StarSwitchEdges): DataFrame = {
+    require(switchEdges >= 0 && switchEdges < Int.MaxValue / 2,
+      s"switchEdges $switchEdges outside [0, ${Int.MaxValue / 2}): the " +
+        "driver fetch bounds k+1 and 2k+3 must fit an Int limit")
     // cast in the SHARED prep: the driver path reads raw longs
     // (row.getLong), so an integer-typed doc id must widen here or the
     // public API's behavior would depend on input size (the star path
@@ -810,17 +816,14 @@ object Dedup {
     // did compute are persisted and the rest replay from the pair
     // pipeline's still-live shuffle stages, which the scheduler skips —
     // the pipeline itself never re-runs.
-    val limE = (switchEdges + 1).min(Int.MaxValue.toLong).toInt
-    val es = edges.limit(limE).collect()
+    val es = edges.limit((switchEdges + 1).toInt).collect()
     lazy val nodes = p.select(col("doc_a").as("id"))
       .union(p.select(col("doc_b").as("id"))).distinct()
     // same one-job gate+fetch for the node side (the self-pair guard):
     // ≤ 2k+2 nodes can touch ≤ k canonical edges, anything above means
     // a pathological self-pair flood — star path
-    lazy val ns: Array[Long] = {
-      val limN = (2 * switchEdges + 3).min(Int.MaxValue.toLong).toInt
-      nodes.limit(limN).collect().map(_.getLong(0))
-    }
+    lazy val ns: Array[Long] =
+      nodes.limit((2 * switchEdges + 3).toInt).collect().map(_.getLong(0))
     if (es.length <= switchEdges && ns.length <= 2 * switchEdges + 2) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {

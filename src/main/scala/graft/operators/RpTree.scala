@@ -33,8 +33,9 @@ import graft.functions.vectors
   *    probe their own leaf plus the [[MaxFlips]] alternative leaves
   *    whose split margins |proj − thr| are smallest — Annoy's
   *    priority-queue spill descent as a deterministic driver-side
-  *    probe-set computation. The search is then one broadcast
-  *    equi-join on the leaf key + exact cosine + per-query top-k:
+  *    probe-set computation. The probe set rides the plan as a
+  *    literal map leaf → (query_id, qv) ([[Ann.probeRows]]; no probe
+  *    table is broadcast), then exact cosine + per-query top-k:
   *    identical distributed shape to a2/a3, probing
   *    (MaxFlips+1)/2^Depth of the corpus.
   *  - a4_indexed persists the assignment `partitionBy("leaf")`
@@ -242,37 +243,26 @@ object RpTree {
 
   // ---------------------------------------------------------- search
 
-  private def probesDf(s: SparkSession, thr: Map[Int, Double],
-      maxFlips: Int = MaxFlips,
-      queryVecs: Seq[(Int, Seq[Double])] = Ann.querySet): DataFrame = {
-    import s.implicits._
+  /** The probe literal for [[Ann.probeRows]]: probed leaf →
+    * (query_id, qv) of every query probing it. */
+  private def leafProbes(thr: Map[Int, Double], maxFlips: Int,
+      queryVecs: Seq[(Int, Seq[Double])]): Map[Int, Seq[(Int, Seq[Double])]] =
     queryVecs.flatMap { case (i, v) =>
-      probeLeaves(thr, v, maxFlips).map(pl => (i, pl, v))
-    }.toDF("query_id", "pleaf", "qv")
-  }
-
-  /** Per-query top-k over probed-leaf candidates via
-    * [[Ann.topKPerQuery]]: the map-side partial limit keeps the probed
-    * set (a constant corpus fraction) from funneling into one task per
-    * query, and the final sort is bounded by k·nq rows. */
-  private def topkPerQuery(cand: DataFrame, k: Int, nq: Int): DataFrame =
-    Ann.topKPerQuery(
-      cand
-        .withColumn("score", vectors.cosineDistance(col("embedding"), col("qv")))
-        .select(col("query_id"), col("vec_id"), col("score")),
-      k, nq)
+      probeLeaves(thr, v, maxFlips).map(pl => pl -> (i, v))
+    }.groupMap(_._1)(_._2)
 
   /** a4: scan-side RP-tree search — assign leaves on the fly (pure
-    * map), broadcast-join the probe pairs, exact cosine inside probed
-    * leaves. */
+    * map), expand each row by the probe literal of its leaf, exact
+    * cosine inside probed leaves, per-query top-k via
+    * [[Ann.cosineTopK]]. */
   def a4Query(s: SparkSession, d: String, k: Int = K,
       maxFlips: Int = MaxFlips): DataFrame = {
     vectors.register(s)
     val thr = treeFor(s, d)
-    val assigned = assignLeaf(Tables.embeddings(s, d), thr)
-    topkPerQuery(
-      assigned.join(broadcast(probesDf(s, thr, maxFlips)),
-        col("leaf") === col("pleaf")), k, Ann.querySet.size)
+    Ann.cosineTopK(
+      Ann.probeRows(assignLeaf(Tables.embeddings(s, d), thr), col("leaf"),
+        "qv", leafProbes(thr, maxFlips, Ann.querySet)),
+      k, Ann.querySet.size)
   }
 
   // ----------------------------------------------------------- index
@@ -310,14 +300,10 @@ object RpTree {
       queryVecs: Seq[(Int, Seq[Double])] = Ann.querySet): DataFrame = {
     vectors.register(s)
     val thr = treeFor(s, d)
-    val idx = Tables.loadLayout(s, ensureIndex(s, d))
-    val allProbes = queryVecs.flatMap { case (_, v) =>
-      probeLeaves(thr, v, maxFlips)
-    }.distinct
-    topkPerQuery(
-      idx.filter(col("leaf").isin(allProbes: _*))
-        .join(broadcast(probesDf(s, thr, maxFlips, queryVecs)),
-          col("leaf") === col("pleaf")), k, queryVecs.size)
+    Ann.cosineTopK(
+      Ann.probeIndex(Tables.loadLayout(s, ensureIndex(s, d)), "leaf", "qv",
+        leafProbes(thr, maxFlips, queryVecs)),
+      k, queryVecs.size)
   }
 
   // ---------------------------------------------------------- oracle

@@ -646,6 +646,37 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("single-query ANN serves exchange-free: probe tables ride the plan, the cut is TakeOrderedAndProject") {
+    // nq = 1: the probe set and the query vector are plan literals, so
+    // no driver-side LocalTableScan is broadcast (one job each), and
+    // the rank cut is a per-partition top-k merge with no exchange
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import graft.operators.{Ann, RpTree, VectorSearch}
+    val d = SparkSpec.TinySf
+    val q = Seq((0, VectorSearch.qvec(41)))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      Seq[(String, () => DataFrame)](
+        "quantizedIvfKnn" -> (() => Ann.quantizedIvfKnn(spark, d, queryVecs = q)),
+        "ivfPqKnn" -> (() => Ann.ivfPqKnn(spark, d, queryVecs = q)),
+        "indexedLshKnn" -> (() => Ann.indexedLshKnn(spark, d, queryVecs = q)),
+        "RpTree.indexedQuery" -> (() => RpTree.indexedQuery(spark, d, queryVecs = q))
+      ).foreach { case (surface, df) =>
+        val exec = df().queryExecution.executedPlan
+        withClue(s"$surface:\n$exec") {
+          exec.collect { case e: ShuffleExchangeExec => e } shouldBe empty
+          exec.collect { case b: BroadcastExchangeExec =>
+            b.collect { case l: LocalTableScanExec => l }
+          }.flatten shouldBe empty
+          exec.toString should include("TakeOrderedAndProject")
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("c15 TTL serve path is a scan of the surviving partitions only") {
     // the gate query must READ the post-expiry layout — one parquet
     // scan, no write job in the serve plan, no join

@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions.col
 
 import graft.functions.vectors
-import graft.operators.{Ann, InvertedIndex, VectorSearch}
+import graft.operators.{Ann, InvertedIndex, RpTree, VectorSearch}
 
-/** Per-request Spark job budget of the two interactive serve paths.
+/** Per-request Spark job budget of the interactive serve paths.
   * A request's latency on a warm corpus is mostly job launches, so
   * the budgets are pinned here, counted by a `SparkListener` over the
   * builder call and its collect together. */
@@ -46,14 +47,41 @@ class ServePathJobsSpec extends SparkSpec {
     jobs.asScala.toSeq.map(_.flatMap(id => Option(plans.get(id))).getOrElse(""))
   }
 
-  test("a warm single-query int8-IVF request starts at most 6 jobs") {
+  /** Jobs of a warm request: collecting `request(40)` builds whatever
+    * the surface needs, then the jobs of `request(41)` count. */
+  private def warmJobs(request: Int => DataFrame): Seq[String] = {
     vectors.register(spark)
-    def request(seed: Int): Unit =
-      Ann.quantizedIvfKnn(spark, d, queryVecs = Seq((0, VectorSearch.qvec(seed))))
-        .collect(): Unit
-    request(40) // cold: codebook, float and int8 layouts
-    val jobs = jobsOf(request(41))
-    withClue(jobs.mkString("\n---\n")) { jobs.size should be <= 6 }
+    request(40).collect()
+    jobsOf(request(41).collect(): Unit)
+  }
+
+  private def one(seed: Int) = Seq((0, VectorSearch.qvec(seed)))
+
+  test("a warm single-query ANN request starts at most 2 jobs") {
+    // one job computes the broadcast candidate (or answer) set, one
+    // collects: probe tables and query vectors ride the plan as
+    // literals, and a one-query cut needs no exchange
+    Seq[(String, Int => DataFrame)](
+      "quantizedIvfKnn" -> (q => Ann.quantizedIvfKnn(spark, d, queryVecs = one(q))),
+      "ivfPqKnn" -> (q => Ann.ivfPqKnn(spark, d, queryVecs = one(q))),
+      "indexedLshKnn" -> (q => Ann.indexedLshKnn(spark, d, queryVecs = one(q))),
+      "RpTree.indexedQuery" -> (q => RpTree.indexedQuery(spark, d, queryVecs = one(q)))
+    ).foreach { case (surface, request) =>
+      val jobs = warmJobs(request)
+      info(s"$surface: ${jobs.size} jobs")
+      withClue(s"$surface:\n" + jobs.mkString("\n---\n")) {
+        jobs.size should be <= 2
+      }
+    }
+  }
+
+  test("a warm 5-query int8-IVF request starts at most 4 jobs") {
+    // no broadcast job for the probe or query table; the per-query
+    // window exchanges of the rank and refine cuts remain
+    val jobs = warmJobs(q => Ann.quantizedIvfKnn(spark, d,
+      queryVecs = (0 until 5).map(i => (i, VectorSearch.qvec(q * 10 + i)))))
+    info(s"${jobs.size} jobs")
+    withClue(jobs.mkString("\n---\n")) { jobs.size should be <= 4 }
   }
 
   test("a fresh BM25 needle on a warm corpus starts at most 4 jobs and never rescans documents") {

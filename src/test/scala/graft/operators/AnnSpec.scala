@@ -86,9 +86,20 @@ class AnnSpec extends SparkSpec {
       .filter(col("rn") <= 5).drop("rn")
       .orderBy("query_id", "score", "vec_id").collect().toSeq
     Seq(1, 3, 32).foreach { p =>
-      val got = Ann.twoPhaseCut(cand.repartition(p), "score", 5)
+      val got = Ann.twoPhaseCut(cand.repartition(p), "score", 5, 3)
         .orderBy("query_id", "score", "vec_id").collect().toSeq
       withClue(s"partitions=$p: ") { got shouldBe expect }
+    }
+    // nq = 1 takes the TakeOrderedAndProject cut: one query's tied
+    // scores against the same reference rank, and its output is
+    // already in the answer's (score, vec_id) order
+    val one = cand.filter(col("query_id") === 1L)
+    val expectOne = expect.filter(_.getAs[Long]("query_id") == 1L)
+    expectOne should have size 5
+    Seq(1, 3, 32).foreach { p =>
+      val got = Ann.twoPhaseCut(one.repartition(p), "score", 5, 1)
+        .collect().toSeq
+      withClue(s"nq=1, partitions=$p: ") { got shouldBe expectOne }
     }
   }
 

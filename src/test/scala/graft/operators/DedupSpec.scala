@@ -189,6 +189,23 @@ class DedupSpec extends SparkSpec {
     out shouldBe want ++ (100L to 110L).map(i => i -> i).toMap
   }
 
+  test("dupClustersAuto refuses a switch whose fetch bounds overflow an Int limit") {
+    val pairs = Seq((1L, 2L), (2L, 5L), (7L, 9L), (9L, 3L))
+      .toDF("doc_a", "doc_b")
+    // a clamped k+1 / 2k+3 bound would accept a truncated fetch as the
+    // whole edge set; an overflowed one fetches nothing at all
+    Seq(-1L, Int.MaxValue / 2L, Int.MaxValue.toLong, Long.MaxValue).foreach { k =>
+      withClue(s"switchEdges=$k: ") {
+        an[IllegalArgumentException] should be thrownBy
+          Dedup.dupClustersAuto(pairs, switchEdges = k)
+      }
+    }
+    // the largest accepted switch still labels through the driver path
+    Dedup.dupClustersAuto(pairs, switchEdges = Int.MaxValue / 2L - 1).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap shouldBe
+      Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 3L -> 3L, 7L -> 3L, 9L -> 3L)
+  }
+
   test("dupClustersAuto output is doc_id-ordered (the d6 contract)") {
     val pairs = Seq((9L, 3L), (1L, 7L), (5L, 5L)).toDF("doc_a", "doc_b")
     val ids = Dedup.dupClustersAuto(pairs).collect()
