@@ -90,6 +90,16 @@ object GraftSession {
       // depth, the deepest cut the engine plans
       .config("spark.sql.optimizer.windowGroupLimitThreshold",
         graft.operators.Ann.PqRerankDepth.toString)
+      // IN lists plan as InSet over a referenced hash set instead of
+      // values inlined into generated Java (In, or InSet's switch
+      // form): a request filter such as `label IN (a, b, c)` then
+      // reuses one compiled class for every value set, where inlined
+      // values compiled ~2 new classes per distinct set (~35 ms of a
+      // ~125 ms filtered-L2 request on a 4-core VM). Results are
+      // identical — InSet has In's null semantics and still translates
+      // into scan pushdown and partition pruning.
+      .config("spark.sql.optimizer.inSetConversionThreshold", "1")
+      .config("spark.sql.optimizer.inSetSwitchThreshold", "0")
       // wide-but-legitimate expression trees (e.g. v8's 64-component
       // embed array) otherwise spam truncation warnings into the log
       .config("spark.sql.debug.maxToStringFields", "2000")

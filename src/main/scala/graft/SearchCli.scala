@@ -334,9 +334,10 @@ object SearchCli {
 
   /** `--tokens "w1,w2"`: the hosted full-text tier (t8/t9) exposed as
     * a per-request surface — BM25-ranked retrieval over the persisted
-    * posting index with the needle parsed from the CLI (the index
-    * stats caches are needle-keyed, so each distinct needle trains its
-    * own idf set). Out-of-vocabulary terms contribute zero hits; an
+    * posting index with the needle parsed from the CLI (idf comes from
+    * the corpus' in-memory term statistics, computed once per corpus
+    * version, so any needle on a warm corpus starts only its scoring
+    * jobs). Out-of-vocabulary terms contribute zero hits; an
     * all-OOV needle renders an empty result table, not an error. */
   private def tokenSearch(spark: SparkSession, a: Args): Unit = {
     import graft.operators.InvertedIndex

@@ -76,10 +76,11 @@ object Dpp {
 
   def peakThreshold(s: SparkSession, d: String): Long = {
     val fp = graft.sources.LocalIndex.fingerprint(Seq(s"$d/events.parquet"))
-    // keyed by dir with the fingerprint in the VALUE (the bm25Stats
-    // shape): regeneration REPLACES the entry instead of accreting one
-    // per historical fingerprint, so a long-lived session that
-    // regenerates in place holds exactly one threshold per dir.
+    // keyed by dir with the fingerprint in the VALUE (the
+    // InvertedIndex.termStats shape): regeneration REPLACES the entry
+    // instead of accreting one per historical fingerprint, so a
+    // long-lived session that regenerates in place holds exactly one
+    // threshold per dir.
     // The Spark job runs OUTSIDE any map lock — a collect inside
     // compute() would hold the bin for the whole job (and a reentrant
     // call for the same dir would throw a recursive-update

@@ -171,18 +171,19 @@ object Stats {
     * fixed by the measurement's resolution, not the corpus), so the
     * corpus contributes one partial-aggregable groupBy and ALL rank
     * math runs on the tiny counts table. The unpartitioned window over
-    * over it is domain-bounded ([[domainCumsum]]). CACHED (domain-sized, like
-    * q57's joint table): both rank tests and their bucket/total
-    * derivations read the in-memory counts, so the corpus is scanned
-    * once across q58 AND q62. */
+    * it is domain-bounded ([[domainCumsum]]). Materialized per call
+    * with [[Lineage.cut]] (domain-sized, like q57's joint table): a
+    * query's consumers — q62's sweep and totals — read the cut, so it
+    * scans the corpus once, and every call re-reads the corpus as it
+    * is now (a session-global cache would outlive the query and serve
+    * the old aggregate after an in-place rewrite). */
   private def clickViewCents(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
+    Lineage.cut(Tables.events(s, d)
       .filter(col("event_type").isin("click", "view"))
       .select(expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("isa"))
       .groupBy(col("cents"))
-      .agg(sum(col("isa")).as("ca"), sum(lit(1L) - col("isa")).as("cb"))
-      .cache()
+      .agg(sum(col("isa")).as("ca"), sum(lit(1L) - col("isa")).as("cb")))
 
   /** q57: Spearman rank correlation — ClickHouse `rankCorr(x, y)` —
     * between quantity and discount per return flag.
@@ -201,20 +202,20 @@ object Stats {
     * is a fold Σ c·xc·yc over those cells, so no rank table is ever
     * joined back onto lineitem. The marginal tables, doubled-rank
     * windows, and the three sums all run on derivations of the one
-    * joint aggregate, which is CACHED: the four consumers (joint +
-    * two marginals + n) read the ≤ flags×50×11-row in-memory table,
-    * never the corpus — exchange reuse alone still re-planned extra
-    * scans, so the materialization is explicit. Cache cost is the
-    * domain size, not the corpus (CacheManager dedupes the entry by
-    * canonicalized plan across calls). */
+    * joint aggregate, which is materialized by [[Lineage.cut]]: the
+    * four consumers (joint + two marginals + n) read the
+    * ≤ flags×50×11-row cut, never the corpus — exchange reuse alone
+    * still re-planned extra scans, so the materialization is
+    * explicit. Its cost is the domain size, not the corpus, and it
+    * lives with the query: each call aggregates the corpus as it is
+    * now. */
   def q57RankCorr(s: SparkSession, d: String): DataFrame = {
-    val joint = Tables.lineitem(s, d).select(
+    val joint = Lineage.cut(Tables.lineitem(s, d).select(
       col("l_returnflag").as("flag"),
       col("l_quantity").cast("long").as("q"),
       expr("CAST(round(l_discount * 100) AS BIGINT)").as("disc"))
       .groupBy(col("flag"), col("q"), col("disc"))
-      .agg(count(lit(1)).as("c"))
-      .cache()
+      .agg(count(lit(1)).as("c")))
     def rank2(valueCol: String, out: String): DataFrame = {
       val w = Window.partitionBy(col("flag")).orderBy(col(valueCol))
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -479,20 +479,20 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("q57 rank corr runs entirely on the cached joint counts table") {
+  test("q57 rank corr runs entirely on the cut joint counts table") {
     // one corpus scan, period: the joint (flag, q, disc) aggregate is
-    // cached, and every consumer (product sums, both rank marginals,
-    // n) must read the InMemoryRelation — a LogicalRelation leaf in
-    // the statistic's own plan would mean a rank table got re-joined
-    // onto lineitem (the round-12 shape this replaced)
+    // materialized by Lineage.cut, and every consumer (product sums,
+    // both rank marginals, n) must read the cut — a LogicalRelation
+    // leaf in the statistic's own plan would mean a rank table got
+    // re-joined onto lineitem (the round-12 shape this replaced)
     val df = SparkEntry.queries("q57_rank_corr")(spark, SparkSpec.TinySf)
     val lp = df.queryExecution.optimizedPlan
     val fileRels = lp.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r }
     withClue(lp.toString) { assert(fileRels.isEmpty) }
-    val cached = lp.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m }
-    assert(cached.nonEmpty)
+    val cut = lp.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r }
+    assert(cut.nonEmpty)
     val p = df.queryExecution.executedPlan.toString
     p should include("BroadcastHashJoin")
     p should not include "SortMergeJoin"
@@ -506,13 +506,17 @@ class PlanAuditSpec extends SparkSpec {
     // (≤ ~56k rows by measurement resolution, corpus-independent), so
     // a single window is the right shape: one plan, one exchange —
     // the bucketed split belongs to domains too big for one task
-    // (q63). The Window must sit ABOVE the counts HashAggregate (the
-    // corpus never feeds a window), and nothing joins.
+    // (q63). The counts aggregate is materialized by Lineage.cut, so
+    // the Window must sit ABOVE the cut's scan and no corpus file scan
+    // may appear at all (the corpus never feeds a window), and nothing
+    // joins.
     val p = plan("q58_mann_whitney")
     p should not include "Join"
     p should not include "CartesianProduct"
+    p should not include "FileScan"
     withClue(p) {
-      assert(p.indexOf("Window") < p.lastIndexOf("HashAggregate"))
+      assert(p.indexOf("Window") >= 0 &&
+        p.indexOf("Window") < p.indexOf("Scan ExistingRDD"))
     }
   }
 

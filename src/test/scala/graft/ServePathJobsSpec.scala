@@ -5,11 +5,12 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr, typedlit}
 
 import graft.functions.vectors
 import graft.operators.{Ann, InvertedIndex, RpTree, VectorSearch}
@@ -84,20 +85,48 @@ class ServePathJobsSpec extends SparkSpec {
     withClue(jobs.mkString("\n---\n")) { jobs.size should be <= 4 }
   }
 
-  test("a fresh BM25 needle on a warm corpus starts at most 4 jobs and never rescans documents") {
-    def request(needle: Seq[String]): Unit =
+  test("a fresh BM25 needle: at most 2 jobs, none in the builder") {
+    // the corpus' term statistics are built by the first request, so a
+    // needle never served before derives its idf on the driver and
+    // starts only its scoring jobs
+    def build(needle: Seq[String]): DataFrame =
       InvertedIndex.bm25Indexed(spark, d, needle)
         .orderBy(col("bm25").desc, col("doc_id")).limit(Ann.K)
-        .collect(): Unit
-    request(InvertedIndex.Needle) // first request: index and corpus constants
-    // needles no other spec draws, so the per-needle stats miss
+    build(InvertedIndex.Needle).collect() // first request: index and statistics
     val tag = java.util.UUID.randomUUID.toString.filter(_.isLetter)
     Seq(Seq("table", "zz" + tag), Seq("stream", "value", "zy" + tag)).foreach { n =>
-      val jobs = jobsOf(request(n))
+      var ranked: DataFrame = null
+      val buildJobs = jobsOf { ranked = build(n) }
+      val jobs = buildJobs ++ jobsOf(ranked.collect(): Unit)
       withClue(s"$n:\n" + jobs.mkString("\n---\n")) {
-        jobs.size should be <= 4
+        buildJobs shouldBe empty
+        jobs.size should be <= 2
         jobs.filter(_.contains("documents.parquet")) shouldBe empty
       }
     }
+  }
+
+  test("a filtered exact request compiles no class for a new label set") {
+    // the harness's filtered-L2 shape: `label IN (...)` plans as InSet
+    // over a referenced set, so every label set shares one generated
+    // class (inlined values compile new classes per distinct set)
+    def request(labels: Seq[Int], seed: Int): Unit = {
+      val combined = Tables.loadLayout(spark, VectorSearch.ensureCombined(spark, d))
+      combined.filter(expr(s"label IN (${labels.mkString(", ")})"))
+        .withColumn("score", vectors.l2Distance(
+          col("image_embedding").cast("array<double>"), typedlit(VectorSearch.qvec(seed))))
+        .select(col("doc_id").cast("long").as("doc_id"), col("caption"),
+          col("lang"), col("source"), col("label").cast("long").as("label"), col("score"))
+        .orderBy(col("score"), col("doc_id"))
+        .limit(Ann.K)
+        .collect(): Unit
+    }
+    // a corpus label plus values no other spec builds, so rows flow and
+    // no earlier compile of the same set is reused
+    val base = 1000000 + scala.util.Random.nextInt(1000000) * 8
+    request(Seq(1, base, base + 1), 50)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    request(Seq(3, base + 3, base + 5), 51)
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount shouldBe compiles
   }
 }

@@ -233,6 +233,71 @@ class InvertedIndexSpec extends SparkSpec {
     after._2 should not be before._2
   }
 
+  /** (idf by term, avgdl) from scratch: a bucket-pruned df aggregate
+    * over the posting layout plus a documents aggregate, through the
+    * statsFor formula. */
+  private def scratchStats(dir: String,
+      needle: Seq[String]): (Map[String, Double], Double) = {
+    val st = spark.read.parquet(s"$dir/documents.parquet")
+      .select(org.apache.spark.sql.functions.size(
+        graft.functions.textops.tokens(col("text"))).cast("long").as("dl"))
+      .agg(count(lit(1)), sum(col("dl"))).head()
+    val (n, sumdl) = (st.getLong(0), st.getLong(1))
+    val dfs = spark.read.parquet(InvertedIndex.indexPath(dir))
+      .filter(col("tb").isin(InvertedIndex.needleBuckets(needle): _*) &&
+        col("token").isin(needle: _*))
+      .groupBy(col("token")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    (needle.map { t =>
+      val df = dfs.getOrElse(t, 0L)
+      t -> math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+    }.toMap, sumdl.toDouble / n)
+  }
+
+  test("per-corpus term statistics equal a from-scratch df aggregate; a grow-only append refreshes them") {
+    val d = SparkSpec.TinySf
+    // NeedleB carries an out-of-vocabulary term; the ad-hoc needle is
+    // served by no gate
+    Seq(InvertedIndex.Needle, InvertedIndex.NeedleB, Seq("stream", "hash", "qzqz"))
+      .foreach { needle =>
+        InvertedIndex.statsFor(spark, d, needle) shouldBe scratchStats(d, needle)
+      }
+    val dir = java.nio.file.Files.createTempDirectory("graft-invidx-").toString
+    writeDocs(dir, docs)
+    val needle = Seq("table", "shard")
+    InvertedIndex.bm25Indexed(spark, dir, needle).collect()
+    val before = InvertedIndex.statsFor(spark, dir, needle)
+    before shouldBe scratchStats(dir, needle)
+    // a new shard lands beside the old files (grow-only ingest)
+    Seq(6L -> "table shard table doc")
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+      .withColumn("n_chars", org.apache.spark.sql.functions.length(col("text")))
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    val next = InvertedIndex.bm25Indexed(spark, dir, needle)
+    next.collect().map(_.getLong(0)) should contain(6L)
+    // the index took the append path (zone map widened to the shard)
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(InvertedIndex.indexPath(dir) + ".ids")), "UTF-8") shouldBe "1:6"
+    val after = InvertedIndex.statsFor(spark, dir, needle)
+    after shouldBe scratchStats(dir, needle)
+    after._1("shard") should be < before._1("shard") // df 0 -> 1
+    after._1("table") should be < before._1("table") // df 2 -> 3 of 6
+    // and the request served the new statistics as its plan literals
+    val planLits = next.queryExecution.analyzed.flatMap(_.expressions
+      .flatMap(_.collect {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, _) => v
+      }))
+    planLits should contain(after._2)
+    val idfLits = next.queryExecution.analyzed.flatMap(_.expressions
+      .flatMap(_.collect {
+        case org.apache.spark.sql.catalyst.expressions.Literal(
+          m: org.apache.spark.sql.catalyst.util.MapData, _) =>
+          m.valueArray().toDoubleArray().toSeq
+      })).flatten
+    idfLits should contain theSameElementsAs after._1.values
+  }
+
   test("tombstone read under a key column other than the sidecar's fails loudly") {
     val dir = java.nio.file.Files.createTempDirectory("graft-invidx-").toString
     writeDocs(dir, docs)

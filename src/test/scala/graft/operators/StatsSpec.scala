@@ -246,4 +246,44 @@ class StatsSpec extends SparkSpec {
       r.getDouble(4) shouldBe (expSum.toDouble / win.length +- 1e-3)
     }
   }
+
+  test("q57 and q58 follow an in-place rewrite of their corpus") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stats-").toString
+    // the corpus is regenerated by a writer outside this session
+    // (Spark's own overwrite would refresh the session's caches by
+    // path): stage the table, then swap its directory into place
+    def swapIn(name: String, table: org.apache.spark.sql.DataFrame): Unit = {
+      val staged = java.nio.file.Paths.get(s"$dir/staged-$name")
+      table.write.parquet(staged.toString)
+      val live = java.nio.file.Paths.get(s"$dir/$name.parquet")
+      if (java.nio.file.Files.exists(live))
+        java.nio.file.Files.walk(live).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.delete(p))
+      java.nio.file.Files.move(staged, live)
+    }
+    // (return flag, quantity, discount) rows and (type, value) events
+    def write(items: Seq[(String, Double, Double)], events: Seq[(String, Double)]): Unit = {
+      swapIn("lineitem", items.toDF("l_returnflag", "l_quantity", "l_discount"))
+      swapIn("events", events.toDF("event_type", "value")
+        .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))))
+    }
+    def served(): (Map[String, Long], (Long, Long)) = {
+      val q57 = Stats.q57RankCorr(spark, dir).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val q58 = Stats.q58MannWhitney(spark, dir).collect().head
+      (q57, (q58.getLong(0), q58.getLong(1)))
+    }
+    // every flag holds two distinct quantities and discounts, so each
+    // rank correlation is defined
+    write(Seq(("A", 1.0, 0.01), ("A", 2.0, 0.02), ("R", 3.0, 0.03), ("R", 1.0, 0.05)),
+      Seq("click" -> 1.0, "view" -> 2.0, "view" -> 3.0))
+    served() shouldBe ((Map("A" -> 2L, "R" -> 2L), (1L, 2L)))
+    // same dir, new rows: each statistic aggregates the corpus as it
+    // is now, not an aggregate materialized by an earlier call
+    write(Seq(("A", 1.0, 0.01), ("A", 2.0, 0.02), ("A", 4.0, 0.06),
+        ("N", 2.0, 0.05), ("N", 4.0, 0.02), ("R", 3.0, 0.03), ("R", 1.0, 0.05)),
+      Seq("click" -> 1.0, "click" -> 4.0, "click" -> 2.5, "view" -> 2.0))
+    served() shouldBe ((Map("A" -> 3L, "N" -> 2L, "R" -> 2L), (3L, 1L)))
+  }
 }
