@@ -16,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    column's whole defining expression into the scan filter was the
   *    dominant profiled pathology this engine tunes against (see
   *    GraftSession / Dedup.spreadBuildMaterialize); the flag catches
-  *    regressions.
+  *    regressions. A `GENERATOR RE-EVAL` line is a
+  *    [[graft.plans.GeneratorLint]] finding: an operator that evaluates
+  *    a generator's input again per generated row.
   */
 object ExplainQ {
   private val HeavyFilter =
@@ -34,6 +36,7 @@ object ExplainQ {
       // inspects the static plan, which has the same filter placement
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       var flagged = 0
+      var reEval = 0
       var listed = 0
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (q, fn) =>
         val plan = fn(spark, sfDir).queryExecution.executedPlan
@@ -52,6 +55,10 @@ object ExplainQ {
             println(s"[audit] $q: HEAVY scan-stage filter: ${cond.take(300)}")
           }
         }
+        graft.plans.GeneratorLint.findings(plan).foreach { f =>
+          reEval += 1
+          println(s"[audit] $q: GENERATOR RE-EVAL $f")
+        }
         // exec-stats line for EVERY query (fresh frame: SQL metrics
         // accumulate per plan instance; streaming gates re-run their
         // bounded stream and report the sink-read scan)
@@ -61,7 +68,7 @@ object ExplainQ {
       }
       println(s"[audit] done, $listed queries listed, $flagged heavy " +
         s"scan filter(s) flagged (hash-based sampling predicates are " +
-        s"expected to appear)")
+        s"expected to appear), $reEval generator re-evaluation(s)")
     } else {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.explain("formatted")

@@ -21,7 +21,11 @@ object GraftSession {
     *    hazard — IsNotNull inferred from JOIN keys via
     *    InferFiltersFromConstraints — is kept, and neutralized where it
     *    bites by making derived join keys statically non-nullable with
-    *    `coalesce`, see Dedup.minhashLsh/simhash.)
+    *    `coalesce`, see Dedup.minhashLsh/simhash.) The mirror image — an
+    *    operator ABOVE the Generate re-evaluating the generator's input
+    *    once per generated row — has no rule to exclude; its guard is
+    *    [[graft.plans.GeneratorLint]], run on every plan the test suite
+    *    executes and by `ExplainQ --audit`.
     */
   val ExcludedRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"

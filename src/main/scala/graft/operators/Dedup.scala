@@ -609,46 +609,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- d6
 
-  /** d6: near-dup pair CLUSTERING — the step every pair-producing dedup
-    * needs before it can act: connected components over the pair graph,
-    * each doc labeled with the min doc_id of its component (= the
-    * canonical keeper). Iterative min-label propagation: each round,
-    * every node takes the min of its own and its neighbors' labels;
-    * convergence in O(component diameter) rounds — near-dup components
-    * are short chains, and the loop stops the first round nothing
-    * changes (checked with one scalar count per round — no data is
-    * collected). `localCheckpoint` cuts the lineage each round, the
-    * standard Spark idiom for iterative graph algorithms. This is the
-    * SIMPLE variant, kept for its readability on shallow graphs; d6
-    * runs [[dupClustersStar]], the O(log n) large-star/small-star
-    * formulation that also survives adversarial chain graphs. */
-  def dupClusters(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint()
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val nbrMin = edges.join(labels, edges("v") === labels("id"))
-        .groupBy(col("u")).agg(min(col("label")).as("nlabel"))
-      // lazy cut: the did-anything-change count below is the action
-      // that materializes `next` — one job per round, not two
-      val next = labels.join(nbrMin, labels("id") === nbrMin("u"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .localCheckpoint(eager = false)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "id")
-        .filter(col("label") =!= col("old")).count()
-      labels = next
-      iter += 1
-    }
-    labels.select(col("id").as("doc_id"), col("label").as("cluster"))
-      .orderBy(col("doc_id"))
-  }
-
   /** Lineage cut between iterations: a RELIABLE checkpoint when the
     * session has a checkpoint dir configured (the 100 TB setting — a
     * lost executor replays from the checkpoint file, not from the full
@@ -665,8 +625,8 @@ object Dedup {
   /** Connected components via alternating large-star/small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * 2014): O(log n) rounds on ANY graph shape — including the
-    * adversarial long chains where [[dupClusters]]' min-label
-    * propagation needs O(diameter) rounds.
+    * adversarial long chains where min-label propagation needs
+    * O(diameter) rounds.
     *
     * Both half-steps share one shape — per-node min over the closed
     * neighborhood (a map-side-combinable groupBy), joined back to the

@@ -67,17 +67,24 @@ object InvertedIndex {
     * every posting row, the standard inverted-file layout, so ranked
     * retrieval needs no join back to the corpus). One explode + one
     * partial-aggregable groupBy — no corpus-global statistics, which
-    * is what makes the layout append-safe. */
-  def postings(docs: DataFrame): DataFrame = {
-    val t = textops.tokens(col("text"))
+    * is what makes the layout append-safe.
+    *
+    * Invariant: a generator's array input is evaluated once per
+    * document. The token array is materialized in a Project below the
+    * `Generate`, because `dl` reads it too: with `size` and `explode`
+    * over the same tokenizing expression, the `size` lands in a
+    * Project above the `Generate` and lowers and regex-splits the
+    * whole text again for every posting row (tokens² per document).
+    * [[graft.plans.GeneratorLint]] flags that shape. */
+  def postings(docs: DataFrame): DataFrame =
     graft.Spread.ifNarrow(docs)
-      .select(col("doc_id"), size(t).cast("long").as("dl"),
-        explode(t).as("token"))
+      .select(col("doc_id"), textops.tokens(col("text")).as("t"))
+      .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
+        explode(col("t")).as("token"))
       .groupBy(col("token"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("tb",
         pmod(textops.hash60(col("token")), lit(Buckets.toLong)).cast("int"))
-  }
 
   /** Layout/schema version — bumped when the posting row shape
     * changes, so stale persisted indexes rebuild instead of serving

@@ -1,14 +1,10 @@
 package graft.functions
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
-
 import graft.SparkSpec
 
 /** KMV theta-sketch tier: the bounded-state arguments q65 rests on,
   * exercised directly on the buffer class and through SQL. */
-class ThetaSketchSpec extends AnyFunSuite with Matchers {
-  private lazy val spark = SparkSpec.session
+class ThetaSketchSpec extends SparkSpec {
 
   private def sketchOf(cap: Int, xs: Seq[Long]): Seq[Long] = {
     val s = new KmvSketch(cap)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.textops
 
 /** t8 inverted-index search: index↔scan equivalence, planning-time
   * bucket pruning, incremental append on corpus growth, and the
@@ -429,5 +430,50 @@ class InvertedIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     got shouldBe scan
     (100L until 106L).foreach { id => got.map(_._1) should contain(id) }
+  }
+
+  test("postings equal an explode-then-size reference, edge docs included") {
+    val edge = Seq[(Long, String)]((900001L, ""), (900002L, null),
+      (900003L, "solo"), (900004L, "echo echo echo"),
+      (900005L, "Mixed-CASE, mixed case; MIXED!! 42x 42X"))
+    val all = graft.Tables.documents(spark, SparkSpec.TinySf)
+      .select(col("doc_id"), col("text"))
+      .unionByName(edge.toDF("doc_id", "text"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("token", "doc_id", "tf", "dl", "tb").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4)))
+        .sorted.toSeq
+    val t = textops.tokens(col("text"))
+    val dl = all.select(col("doc_id"),
+      org.apache.spark.sql.functions.size(t).cast("long").as("dl"))
+    val ref = all.select(col("doc_id"), explode(t).as("token"))
+      .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("tf"))
+      .join(dl, "doc_id")
+      .withColumn("tb", pmod(textops.hash60(col("token")),
+        lit(InvertedIndex.Buckets.toLong)).cast("int"))
+    val got = rows(InvertedIndex.postings(all))
+    got shouldBe rows(ref)
+    got.size should be > 1000
+    // the edge docs, by hand: empty and null text post nothing
+    got.filter(_._2 > 900000L).map(r => (r._1, r._2, r._3, r._4)) shouldBe Seq(
+      ("42x", 900005L, 2L, 7L), ("case", 900005L, 2L, 7L),
+      ("echo", 900004L, 3L, 3L), ("mixed", 900005L, 3L, 7L),
+      ("solo", 900003L, 1L, 1L))
+  }
+
+  test("postings plan: the tokenizer runs once, below the Generate") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, RegExpExtractAll}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    val plan = InvertedIndex.postings(graft.Tables.documents(spark, SparkSpec.TinySf))
+      .queryExecution.optimizedPlan
+    def extracts(p: LogicalPlan): Int = p.map(_.expressions
+      .map(_.collect { case e: RegExpExtractAll => e }.size).sum).sum
+    val gens = plan.collect { case g: Generate => g }
+    gens should have size 1
+    withClue(plan.treeString) {
+      extracts(plan) shouldBe 1
+      extracts(gens.head.child) shouldBe 1
+      gens.head.generator.children.forall(_.isInstanceOf[Attribute]) shouldBe true
+    }
   }
 }

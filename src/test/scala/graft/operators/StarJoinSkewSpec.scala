@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
@@ -22,8 +20,7 @@ import graft.SparkSpec
   *     must mark the join `skew=true` (the hot partition split into
   *     task-sized slices) and produce identical results.
   */
-class StarJoinSkewSpec extends AnyFunSuite with Matchers {
-  private lazy val spark = SparkSpec.session
+class StarJoinSkewSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.01"
 
   /** Orders with customer 1 owning ~10% of all orders. The payload
