@@ -123,7 +123,9 @@ class DedupSpec extends SparkSpec {
     jac.length shouldBe 0 // symmetric jaccard at 0.5 misses the excerpt
   }
 
-  test("star and auto clusters: chains collapse to min-id components") {
+  // the chain assertions of the deleted simple-propagation dupClusters,
+  // run on the star and auto paths that replace it
+  test("dupClusters: chains collapse to min-id components") {
     def labels(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
     val chains = Seq((1L, 2L), (2L, 5L), (7L, 9L)).toDF("doc_a", "doc_b")
@@ -132,11 +134,6 @@ class DedupSpec extends SparkSpec {
     labels(Dedup.dupClustersAuto(chains)) shouldBe want
     // past the driver switch: the distributed path labels the same
     labels(Dedup.dupClustersAuto(chains, switchEdges = 0L)) shouldBe want
-    // a chain entered from its high end, and a self-pair
-    val multi = Seq((1L, 2L), (2L, 5L), (7L, 9L), (9L, 3L), (12L, 12L))
-      .toDF("doc_a", "doc_b")
-    labels(Dedup.dupClustersStar(multi)._1) shouldBe Map(1L -> 1L, 2L -> 1L,
-      5L -> 1L, 3L -> 3L, 7L -> 3L, 9L -> 3L, 12L -> 12L)
   }
 
   test("dupClustersStar: 100-node path graph converges in O(log n) rounds") {
@@ -220,6 +217,15 @@ class DedupSpec extends SparkSpec {
     val ids = Dedup.dupClustersAuto(pairs).collect()
       .map(_.getAs[Long]("doc_id"))
     ids shouldBe ids.sorted
+  }
+
+  test("dupClustersStar matches dupClusters on a multi-component graph") {
+    val pairs = Seq((1L, 2L), (2L, 5L), (7L, 9L), (9L, 3L), (12L, 12L))
+      .toDF("doc_a", "doc_b")
+    val star = Dedup.dupClustersStar(pairs)._1.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
+    star shouldBe Map(1L -> 1L, 2L -> 1L, 5L -> 1L,
+      3L -> 3L, 7L -> 3L, 9L -> 3L, 12L -> 12L)
   }
 
   test("dupClustersStar uses reliable checkpoints when a checkpoint dir is set") {
