@@ -201,34 +201,6 @@ object Bench {
       "\"" + k + "\":\"" + e.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\"" }
     val errJson = errs.mkString("{", ",", "}")
     val total = stats.collect { case (_, Some((med, _, _, _)), _) => med }.sum
-    // SPARK_GRAFT_BENCH_STREAM_PHASES: one extra instrumented pass over
-    // the streaming gates AFTER the timed record (medians untouched),
-    // splitting each gate's wall into startup (scratch wipe + child
-    // session + plan build + stream start), maintain (awaitTermination
-    // — the micro-batch work), and serve (executing the returned
-    // DataFrame through the noop sink). BASELINE's streaming-phase
-    // table freezes these so a real maintenance/serve regression can't
-    // hide inside stream-startup harness noise.
-    val streamPhases = if (sys.env.contains("SPARK_GRAFT_BENCH_STREAM_PHASES")) {
-      val entries = names.filter(_.startsWith("s")).flatMap { n =>
-        try {
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(n)(spark, sfDir)
-          val built = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          val serve = (System.nanoTime() - t1) / 1e9
-          val (st, mt) = Option(
-            graft.streaming.EventStream.lastPhases.get(n.split("_").head))
-            .getOrElse((-1.0, -1.0))
-          Some("\"" + n + "\":{\"startup\":" + fmt(st) +
-            ",\"maintain\":" + fmt(mt) + ",\"serve\":" + fmt(serve) +
-            ",\"gate_total\":" + fmt(built + serve) + "}")
-        } catch { case _: Throwable => None }
-      }
-      Some(entries.mkString("{", ",", "}"))
-    } else None
-    val phasesJson = streamPhases.map(p => s""","stream_phases":$p""").getOrElse("")
     def fmt2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val cpusDetected = Runtime.getRuntime.availableProcessors()
     val loadMax = if (loadSamples.isEmpty) -1.0 else loadSamples.max
@@ -249,7 +221,7 @@ object Bench {
     // overwrote the c32 run's BENCH_full.json (single fixed name),
     // destroying the only full 32-core per-query record.
     // SPARK_GRAFT_BENCH_OUT still overrides for ad-hoc subset runs.
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$Runs,"failed":${errs.length},"errors":$errJson,"queries":$qs,"spread":$spread,"load1_by_query":$loadJson$envJson$phasesJson$probeJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$Runs,"failed":${errs.length},"errors":$errJson,"queries":$qs,"spread":$spread,"load1_by_query":$loadJson$envJson$probeJson,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_full_c$cpus.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fullLine + "\n")
     catch { case e: Throwable =>

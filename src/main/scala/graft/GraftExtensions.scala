@@ -44,6 +44,7 @@ object GraftExtensions {
       functions.topk.builders ++
       functions.heavyhitters.builders ++
       functions.uniqupto.builders ++
+      functions.collectupto.builders ++
       functions.thetasketch.builders ++
       functions.tdigest.builders
 
@@ -69,6 +70,7 @@ object GraftExtensions {
     "topk_sketch" -> "topk_sketch(key, capacity, k) - Space-Saving approximate top-k of BIGINT keys; returns array<struct<item, cnt, err>>, exact when capacity >= distinct keys.",
     "topk_weighted_sketch" -> "topk_weighted_sketch(key, weight, capacity, k) - Space-Saving approximate top-k of BIGINT keys by summed positive BIGINT weight; returns array<struct<item, w, err>>, exact when capacity >= distinct keys.",
     "uniq_upto" -> "uniq_upto(key, n) - Exact distinct count of BIGINT keys while <= n, else n + 1; per-group state bounded at n + 1 keys.",
+    "collect_up_to" -> "collect_up_to(x, limit) - collect_list that stops adding at limit elements; per-group state bounded at limit values.",
     "char_grams" -> "char_grams(s) - Distinct character 4-grams of a string, first-occurrence order; child evaluated once per row.",
     "gram_hash60s" -> "gram_hash60s(s) - hash60 of the 8-codepoint gram at every position (one native pass; short inputs yield one whole-string gram).",
     "pair_explode" -> "pair_explode(arr) - Every unordered element pair of an array<struct<bigint, ...>>, each canonicalized lo/hi by the leading id.",

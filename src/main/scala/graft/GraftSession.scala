@@ -62,20 +62,24 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.optimizer.excludedRules", ExcludedRules)
-      // ObjectHashAggregate (collect_list/collect_set — the dedup
-      // bucket builds, q26) falls back to SORT-based aggregation after
-      // only 128 distinct keys per partition by default, silently
-      // re-introducing the per-partition sort the hash agg exists to
-      // avoid. The raise is safe for the plans this engine builds
-      // because their collect state is bounded by INPUT bytes, not key
-      // count: each posting row lands in exactly one bucket array, so
-      // a partition's total array state ≈ its (maxPartitionBytes-
-      // bounded) input share, whatever the key count. The threshold is
-      // a key-count proxy for the pathological case this engine never
-      // plans — collecting huge arrays under FEW keys — and 4M keys
-      // (vs a 2–4M-row shuffle partition at 128 MB) keeps the dedup
-      // builds hash-based at any scale while still yielding the sort
-      // fallback's disk path for key-explosions beyond that. NOT 16M+:
+      // ObjectHashAggregate (collect_list/collect_set/collect_up_to —
+      // the dedup bucket step, q26) falls back to SORT-based
+      // aggregation after only 128 distinct keys per partition by
+      // default, silently re-introducing the per-partition sort the
+      // hash agg exists to avoid. Every bucket key enters the map,
+      // singletons included (the dedup step drops them after the
+      // collect). The raise is safe for the plans this engine builds
+      // because their collect state is bounded twice: by INPUT bytes —
+      // each posting row lands in at most one bucket array, so a
+      // partition's total array state ≈ its (maxPartitionBytes-
+      // bounded) input share, whatever the key count — and per key by
+      // collect_up_to's cap + 1 entries. The threshold is a key-count
+      // proxy for the pathological case this engine never plans —
+      // collecting huge arrays under FEW keys — and 4M keys (vs a
+      // 2–4M-row shuffle partition at 128 MB, so at most that many
+      // keys) keeps the dedup builds hash-based at any scale while
+      // still yielding the sort fallback's disk path for
+      // key-explosions beyond that. NOT 16M+:
       // the fallback is also the only spill valve ObjectHashAggregate
       // has, and an effectively-infinite threshold would disable it
       // for every collect in the session, including user queries whose

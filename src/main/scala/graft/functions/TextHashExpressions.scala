@@ -482,7 +482,8 @@ case class GramBuckets(child: Expression, buckets: Int, bigramsOnly: Boolean)
   * unordered element pair of a bucket, each pair canonicalized lo/hi
   * by the leading doc_id (ties keep the HOF form's orientation) — the
   * in-bucket pair step of [[graft.operators.Dedup.bucketedPairs]],
-  * shared by the whole dedup family.
+  * run on each bucket array [[graft.operators.Dedup.cappedBuckets]]
+  * collects.
   *
   * Why native: the declarative form,
   * `flatten(transform(ds, (x, i) => transform(slice(ds, i + 2,

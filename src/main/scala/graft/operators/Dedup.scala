@@ -10,10 +10,11 @@ import graft.functions.{textops, vectors}
   *
   * The capability block a large-scale LLM-data pipeline needs on top of
   * the reference's query surface. Every operator is shuffle-conscious:
-  * candidate generation is always `explode → groupBy/join on a bucket
-  * key` (content hash, shingle, LSH band, simhash chunk, sign block) —
-  * never an all-pairs cross join — so the 100 TB cost is one shuffle of
-  * the exploded keys, and pair verification only happens inside buckets.
+  * candidate generation is always `explode → one bounded collect per
+  * bucket key` (content hash, shingle, LSH band, simhash chunk, sign
+  * block; [[Dedup.cappedBuckets]]) — never an all-pairs cross join —
+  * so the 100 TB cost is one shuffle of the exploded keys, and pair
+  * verification only happens inside buckets.
   *
   * Core functions take DataFrames (unit-testable on in-memory data);
   * the `*Query` wrappers bind them to the driver's parquet testdata.
@@ -129,111 +130,49 @@ object Dedup {
       graft.functions.texthash.shingleHash60s(
         textops.tokens(col("text"))).as("hvs"))
 
-  /** Within-bucket candidate-pair generation shared by d2/d7 (shingle
-    * postings) and d3 (LSH band buckets). Input `ex` has the bucket
-    * key columns plus (doc_id, n); output is one row per (doc_a <
-    * doc_b) pair with the number of shared buckets (`common`) and the
-    * carried per-doc sizes (na, nb).
+  /** The bucket step of every near-dup pair query (d2–d5, d7, d9, m4)
+    * and of d8's posting build: `rows` (keyCols…, payload columns) →
+    * one row per bucket whose occupancy lies in [minDf, cap], holding
+    * the bucket's payloads as `ds`.
     *
-    * Plan shape, and why it beats the posting SELF-JOIN it replaced:
-    *  1. bucket occupancy: groupBy(key).count — map-side partial, so
-    *     only (key, partial-count) rows cross its exchange — kept for
-    *     2 ≤ df ≤ cap. One filter removes BOTH degenerate ends:
-    *     singleton buckets (the vast majority of shingles — they can
-    *     never pair) and hot buckets (> cap — the skew guard; a
-    *     boilerplate shingle at 100 TB must not emit df²/2 pairs).
-    *  2. postings ⋈ surviving-bucket list on the bucket key, hinted
-    *     SHUFFLE_HASH: both sides arrive hash-partitioned by the key
-    *     (the count side reuses the same partitioning), the per-task
-    *     build side is the tiny surviving-key set, and NO side is
-    *     broadcast — the hot/singleton list grows with the corpus, so
-    *     a broadcast hint here would eventually not fit (and the
-    *     planner may still pick broadcast at small scale via AQE).
-    *     SHUFFLE_HASH also avoids sort-merge's full sort of the
-    *     posting rows.
-    *  3. groupBy(key).collect_list(struct(doc_id, n)) on the filtered
-    *     postings — already partitioned by the key, so no second
-    *     exchange; every bucket is ≤ cap rows, so per-group state is
-    *     bounded — a hot shingle never materialises a corpus-sized
-    *     array.
-    *  4. in-bucket pair explode (index-slice transform → flatten →
-    *     explode): ≤ cap·(cap−1)/2 pairs per bucket, ordered lo/hi by
-    *     doc_id in the lambda so no post-hoc canonicalisation pass;
-    *     then groupBy(pair) to count shared buckets.
+    *  - ONE exchange: the rows are hashed on the bucket key, and the
+    *    collect and whatever the caller does per bucket (the pair
+    *    explode) run in the stage after it. The repartition is
+    *    explicit because a user-specified repartition is exempt from
+    *    AQE coalescing — a small input must not collapse the
+    *    quadratic in-bucket work into one task.
+    *  - Bounded state: [[graft.functions.CollectUpToAgg]] stops at
+    *    cap + 1 entries, so a hot bucket (> cap — the skew guard; a
+    *    boilerplate shingle at 100 TB must not emit df²/2 pairs) never
+    *    holds more than cap + 1 payloads, and the size filter drops it.
+    *    A bucket of at most cap rows is collected whole.
     *
-    * The self-join formulation shuffled the same posting rows once
-    * too, but then SORTED both reuses of the exchange (sort-merge
-    * join on the bucket key) before re-shuffling the joined pairs —
-    * two full sorts and a join for pairs the bucket already holds
-    * locally. Measured at sf0.1 this rewrite is ~35–40% of the
-    * d2/d3/d7 wall clock. */
-  private[operators] def bucketedPairs(exIn: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
-    // size-less callers (d3 bands, d5 LSH buckets) omit `n`; carry a
-    // zero instead of making every call site bolt on a dummy column
-    val ex = if (exIn.columns.contains("n")) exIn
-      else exIn.withColumn("n", lit(0))
+    * Never a self-join on the bucket key: that sorts the posting rows
+    * twice and re-shuffles pairs the bucket already holds locally. */
+  private[operators] def cappedBuckets(rows: DataFrame, keyCols: Seq[String],
+      payload: Column, cap: Int, minDf: Int = 2): DataFrame = {
+    val s = rows.sparkSession
+    graft.functions.collectupto.register(s)
     val key = keyCols.map(col)
-    // ONE posting exchange, hash-partitioned on the bucket key (r21
-    // re-plan). The r20 shape ran the occupancy count and the posting
-    // join as two consumers of the BUILD exchange — each re-exploding
-    // the shingle arrays (two ~700 ms stages at sf0.1) and writing its
-    // own exchange (partial counts + postings) — then ROUND-ROBIN
-    // repartitioned the collapsed buckets before the explode, paying
-    // sortBeforeRepartition on the bucket rows. Explicitly hashing the
-    // POSTING rows on the key instead satisfies every downstream
-    // requirement at once: the occupancy count, the count⋈postings
-    // prune join (both sides co-partitioned — ReuseExchange reads one
-    // shuffle twice), the per-bucket collect AND the pair explode all
-    // fuse into a single post-exchange stage. One explode pass and one
-    // exchange where there were two passes and three exchanges
-    // (measured at sf0.1: d2 9→6 jobs, 4.01→2.55 s wall; plan files
-    // pin the shape). Skew: a user-specified repartition is exempt
-    // from AQE coalescing (the r19 single-task-explode regression
-    // guard), per-partition explode work is Σ occ² over its hashed
-    // keys with occ ≤ cap, and hot keys above the cap cross the
-    // exchange only to be counted and dropped — same bytes as the r20
-    // posting-branch exchange.
-    val parallelism = exIn.sparkSession.sessionState.conf.numShufflePartitions
-    val exP = ex.repartition(parallelism, key: _*)
-    // count(doc_id), not count(1) — identical occupancies (doc_id is
-    // never null on a posting row), doc_id kept alive for plan
-    // canonicalization (the r20 shared-build lesson). Note the planner
-    // still runs the count as its own map-side partial below a partial-
-    // counts exchange rather than reading exP post-shuffle — measured
-    // r21: forcing column parity (a throwaway max(n)) does NOT change
-    // that choice, and map-side 8-byte count partials are the scalable
-    // plan anyway; the explode therefore runs once per side, with the
-    // heavy collect+explode work fused after exP.
-    // max(n) is a THROWAWAY whose only job is column parity: without a
-    // reference to `n`, pruning drops it from the count branch's copy
-    // of exP, the two exchanges stop being canonically equal, and the
-    // count side pays its OWN full-posting exchange plus a second
-    // explode pass (r22 AQE final-plan dump: Exchange(16) [doc_id, g]
-    // next to Exchange(11) [doc_id, n, g], no reuse). With parity both
-    // branches read ONE materialized posting shuffle (ReusedExchange
-    // in the final plan), the occupancy count runs post-shuffle on the
-    // co-partitioned rows, and the build explode runs once. The filter
-    // keeps the throwaway ALIVE through pruning with a tautology
-    // Catalyst has no rule to fold: x >= Long.MinValue is true for
-    // every non-null long (n itself may be ANY value — d4/m4 carry a
-    // raw hash here, so `>= 0` would be WRONG), and the isNull arm
-    // keeps all-null-n groups. Behavior is bit-identical to the plain
-    // count for every input.
-    val live = exP.groupBy(key: _*)
-      .agg(count(col("doc_id")).as("df"),
-        max(col("n").cast("long")).as("_n_parity"))
-      .filter(col("df").between(2, cap) &&
-        (col("_n_parity") >= Long.MinValue || col("_n_parity").isNull))
-      .select(key: _*)
-    val buckets = exP.join(live.hint("shuffle_hash"), keyCols)
+    rows.repartition(s.sessionState.conf.numShufflePartitions, key: _*)
       .groupBy(key: _*)
-      .agg(collect_list(struct(col("doc_id"), col("n"))).as("ds"))
-    // in-bucket pairs via the native [[graft.functions.PairExplode]]
-    // (one pass per bucket; the declarative nested-HOF form it
-    // replaced sliced the tail array per index and evaluated its
-    // lambda interpretively per pair — see the expression scaladoc)
-    buckets.select(explode(
-      graft.functions.texthash.pairExplode(col("ds"))).as("p"))
+      .agg(graft.functions.collectupto.collectUpTo(payload, cap + 1).as("ds"))
+      .filter(size(col("ds")).between(minDf, cap))
+  }
+
+  /** Candidate pairs shared by d2/d7 (shingle postings), d3 (LSH band
+    * buckets), d4 and m4 (hash chunks). Input has the bucket key
+    * columns plus (doc_id, n); output is one row per (doc_a < doc_b)
+    * pair with the number of shared buckets (`common`) and the carried
+    * per-doc values (na, nb). Pairs come from [[cappedBuckets]] through
+    * the native [[graft.functions.PairExplode]], which orders each pair
+    * lo/hi by doc_id; the pair groupBy counts shared buckets. */
+  private[operators] def bucketedPairs(ex: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
+    // size-less callers (d3 bands) carry a zero `n`
+    val n = if (ex.columns.contains("n")) col("n") else lit(0).as("n")
+    cappedBuckets(ex, keyCols, struct(col("doc_id"), n), cap)
+      .select(explode(
+        graft.functions.texthash.pairExplode(col("ds"))).as("p"))
       .groupBy(col("p.lo.doc_id").as("doc_a"), col("p.hi.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("common"),
         max(col("p.lo.n")).as("na"), max(col("p.hi.n")).as("nb"))
@@ -244,7 +183,7 @@ object Dedup {
     * for free and saves two whole size-join branches), drop hot
     * shingles (df > [[MaxShingleDf]]), generate pairs inside the
     * surviving capped buckets ([[bucketedPairs]] — one posting
-    * shuffle, no sort-merge self-join), then Jaccard from the carried
+    * shuffle, no self-join), then Jaccard from the carried
     * set sizes. Pairs only materialise for docs that actually share a
     * shingle. */
   def ngramJaccard(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
@@ -285,7 +224,7 @@ object Dedup {
     * shingles of the h-th universal hash of hash60(shingle); band key =
     * xor of the band's 4 signature rows (order-independent, so no
     * collect_list ordering hazard). Docs sharing any (band, key) bucket
-    * become candidates — the self-join is on the bucket key, so cost
+    * become candidates — pairs form inside each bucket, so cost
     * scales with bucket occupancy, not corpus². Oversized buckets
     * (skew) are dropped by [[MaxBandBucket]].
     *
@@ -314,9 +253,7 @@ object Dedup {
               .reduce(_ bitwiseXOR _), lit(-1L)).as("bkey")))).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     // skew cap + pair generation via [[bucketedPairs]]: singleton and
-    // oversized buckets are dropped by a co-partitioned occupancy
-    // join (not a count-window that would sort every (doc, band)
-    // row, not a broadcast that grows with the corpus), and pairs
+    // oversized buckets are dropped by the bounded collect, and pairs
     // explode inside the surviving ≤ MaxBandBucket buckets — cost
     // scales with bucket occupancy, never corpus².
     bucketedPairs(bands, Seq("band", "bkey"), MaxBandBucket)
@@ -372,10 +309,9 @@ object Dedup {
     * pairing finds every such pair without comparing all pairs.
     * Verification = bit_count(xor) on the survivors.
     *
-    * Pair generation is the shared occupancy-capped [[bucketedPairs]]
-    * (d2/d3/d5/d7's shape): singleton buckets die before the collect
-    * shuffle, hot buckets (> [[MaxChunkBucket]]) are the skew guard,
-    * and the pair groupBy IS the dedup of pairs found in several
+    * Pair generation is the shared [[bucketedPairs]] (d2/d3/d7's
+    * shape): singleton buckets yield no pairs, hot buckets
+    * (> [[MaxChunkBucket]]) are the skew guard, and the pair groupBy IS the dedup of pairs found in several
     * chunks — no post-join `distinct` over 4×-duplicated rows. The
     * simhash rides the posting row as the carried per-doc `n` (it is
     * constant per doc, so the pair row's na/nb ARE the two hashes) —
@@ -469,8 +405,8 @@ object Dedup {
     * sign-bit bucket per table plus, for a [[nearDupProbeSlots]]
     * fraction of vectors, the ±1-bit ring bucket at its min-|margin|
     * plane (one fused codegen'd map — T×P dot products per row, no
-    * shuffle); the self-join runs per (table, bucket) with oversized
-    * buckets dropped, so candidate cost is Σ membership²/2 over capped
+    * shuffle); pairs form per (table, bucket) with oversized
+    * buckets dropped ([[cappedBuckets]]), so candidate cost is Σ membership²/2 over capped
     * buckets — pinned ≈ [[NearDupTargetOcc]]/2 pairs per vector per
     * table at every n above the floor (linear in n, no plane-step
     * sawtooth), never corpus². The exact cosine verify is FUSED into
@@ -542,63 +478,19 @@ object Dedup {
 
   /** Shared capped-bucket in-cell verify (d5's LSH buckets, d9's
     * semantic cells): bucket rows (keyCols…, doc_id, embedding) →
-    * surviving cosine pairs (vec_a, vec_b, score). The
-    * [[bucketedPairs]] skeleton — singleton/hot pruning on a
-    * map-side-combinable count, SHUFFLE_HASH (never broadcast a
-    * corpus-growing side), AQE-exempt round-robin repartition before
-    * the explode — with the VERIFY fused into the in-bucket pair
+    * surviving cosine pairs (vec_a, vec_b, score). The bucket step is
+    * [[cappedBuckets]]; the VERIFY is fused into the in-bucket pair
     * enumeration ([[graft.functions.NearPairExplode]]): both vectors
     * of every candidate pair are already co-located in the bucket
-    * row, so enumerating id pairs, shuffling Σ occ²/2 of them through
-    * a dedup groupBy and re-joining the corpus embeddings TWICE (the
-    * r19 plan) did a corpus-sized join dance to reject ~99.9% of
-    * them. The embedding rides the posting row once; only SURVIVING
-    * pairs ever become rows.
-    *
-    * r21: the occupancy count no longer re-derives keys from a second
-    * column-pruned source pass (the r20 "two scans" trade) — both the
-    * count and the probe side read ONE key-partitioned exchange; see
-    * the in-body comment. The alternatives considered then still lose:
-    * a count window forces WindowExec's full sort, and a size-capped
-    * collect aggregate carries per-group LIST state through the
-    * map-side partial. */
+    * row, so the embedding rides the bucket row once and only
+    * SURVIVING pairs ever become rows — no id-pair shuffle and no
+    * re-join of the corpus embeddings to reject ~99.9% of them. */
   private def nearPairsInBuckets(rows: DataFrame, keyCols: Seq[String],
-      cap: Int, maxDistance: Double): DataFrame = {
-    val key = keyCols.map(col)
-    // Same one-exchange re-plan as [[bucketedPairs]] (r21): hash the
-    // embedding-carrying rows on the bucket key once; occupancy count,
-    // prune join, per-bucket collect and the fused verify-explode all
-    // consume that partitioning in one post-exchange stage. This also
-    // retires the documented two-scan trade above: the count no longer
-    // re-derives keys from a second column-pruned source pass — it
-    // counts the exchanged rows (a local shuffle read; the embedding
-    // payload rides the exchange exactly once either way).
-    val parallelism = rows.sparkSession.sessionState.conf.numShufflePartitions
-    val rowsP = rows.repartition(parallelism, key: _*)
-    // Same column-parity pin as [[bucketedPairs]] (r22): without a
-    // reference to `embedding`, pruning drops it from the count
-    // branch's copy of rowsP and the branch re-derives the keys from a
-    // SECOND source scan + its own small exchange (r22 AQE final-plan
-    // dump for d5: two Scan parquet nodes, no ReusedExchange — the r20
-    // two-scan trade was never actually retired at runtime). With
-    // parity the count reads the one materialized embedding-carrying
-    // shuffle locally; the second scan and its re-derivation (bucket
-    // re-assignment per vector) disappear. The filter tautology keeps
-    // the throwaway alive (no Catalyst rule folds x >= Long.MinValue).
-    val live = rowsP.groupBy(key: _*)
-      .agg(count(col("doc_id")).as("df"),
-        max(size(col("embedding")).cast("long")).as("_e_parity"))
-      .filter(col("df").between(2, cap) &&
-        (col("_e_parity") >= Long.MinValue || col("_e_parity").isNull))
-      .select(key: _*)
-    val buckets = rowsP.join(live.hint("shuffle_hash"), keyCols)
-      .groupBy(key: _*)
-      .agg(collect_list(struct(col("doc_id"), col("embedding"))).as("ds"))
-    buckets
+      cap: Int, maxDistance: Double): DataFrame =
+    cappedBuckets(rows, keyCols, struct(col("doc_id"), col("embedding")), cap)
       .select(explode(vectors.nearPairExplode(col("ds"), maxDistance)).as("p"))
       .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
         col("p.score").as("score"))
-  }
 
   def d5Query(s: SparkSession, d: String): DataFrame = {
     vectors.register(s)
@@ -830,8 +722,8 @@ object Dedup {
     * recrawls, boilerplate-wrapped copies). Input = corpus plus a
     * simulated excerpt recrawl of every 25th doc (offset ids, same
     * construction idea as d1's recrawl — the synthetic corpus has no
-    * excerpts of its own to find). Same bucketed posting self-join as
-    * [[ngramJaccard]] — explode, hot-shingle cap, join on the shingle —
+    * excerpts of its own to find). Same bucketed posting pairs as
+    * [[ngramJaccard]] — explode, hot-shingle cap, pairs per shingle —
     * only the scoring denominator differs, so the 100 TB cost model is
     * d2's. */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
@@ -941,12 +833,11 @@ object Dedup {
     // cap drops the same population statistically; residual df drift
     // across batches remains the documented LSM trade, folded back at
     // the periodic full rebuild.
-    def postings(docs: DataFrame, cap: Long = MaxShingleDf): DataFrame = {
+    def postings(docs: DataFrame, cap: Int = MaxShingleDf): DataFrame = {
       val ex = docShingles(docs)
         .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
-      val live = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= cap).select(col("g"))
-      ex.join(live.hint("shuffle_hash"), Seq("g"))
+      cappedBuckets(ex, Seq("g"), struct(col("doc_id"), col("n")), cap, minDf = 1)
+        .select(col("g"), inline(col("ds")))
     }
     def setMarker(ndocs: Long): Unit = {
       s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
@@ -973,8 +864,8 @@ object Dedup {
         val shardN = shard.count()
         val priorN = storedNdocs().getOrElse(
           math.max(1L, Tables.documents(s, d).count() - shardN))
-        val cap = math.max(1L,
-          math.round(MaxShingleDf.toDouble * shardN / math.max(1L, priorN)))
+        val cap = math.round(MaxShingleDf.toDouble * shardN / math.max(1L, priorN))
+          .max(1L).min(Int.MaxValue - 1L).toInt
         postings(shard, cap)
           .repartition(buckets, col("g"))
           .write.mode("append")
@@ -1221,9 +1112,9 @@ object Dedup {
     *
     * Plan: codegen'd [[Ann.nearestCentroid]] assignment (pure map —
     * the reference-object argmin loop, no shuffle), then the shared
-    * occupancy-capped in-cell fused verify ([[nearPairsInBuckets]],
-    * r20 — the exact cosine runs inside the cell row, only surviving
-    * pairs become rows), and a partial-aggregable groupBy for the min
+    * in-cell fused verify ([[nearPairsInBuckets]] over
+    * [[cappedBuckets]] — the exact cosine runs inside the cell row,
+    * only surviving pairs become rows), and a partial-aggregable groupBy for the min
     * keeper. k scales as n/[[SemTargetCell]] so
     * cells stay ~constant; past [[SemMaxK]] the assignment IS
     * two-level ([[SemCells.TwoLevel]], r19: coarse literal fold routes
@@ -1245,7 +1136,7 @@ object Dedup {
     val assigned = assigner.withCell(
         e.select(col("vec_id").as("doc_id"), col("embedding")), "cell")
       .select(col("doc_id"), col("embedding"), col("cell"))
-    // in-cell fused verify (r20 — [[nearPairsInBuckets]]): each vector
+    // in-cell fused verify ([[nearPairsInBuckets]]): each vector
     // lives in exactly ONE cell, so surviving pairs are already
     // distinct and feed the keeper groupBy directly
     nearPairsInBuckets(assigned, Seq("cell"), MaxNearDupBucket, maxDistance)

@@ -392,7 +392,8 @@ object Multimodal {
     * chunk, so pairing inside (chunk, value) buckets finds every such
     * pair with NO all-pairs comparison; wider radii (the 12 here)
     * trade recall exactly as published. Candidate generation is the
-    * shared occupancy-capped [[Dedup.bucketedPairs]] — the pHash rides
+    * shared [[Dedup.bucketedPairs]] over [[Dedup.cappedBuckets]]
+    * (one bounded collect per chunk bucket) — the pHash rides
     * the posting row as `n`, so the pair row's na/nb ARE the two
     * hashes and verification is one `bit_count(xor)` with no join
     * back. At 100 TB this is the image near-dup pass every multimodal
@@ -403,7 +404,7 @@ object Multimodal {
   /** The dedup physics, decoupled from the hash source: takes ANY
     * `(doc_id, ph)` table — the stub byte-gram SimHash (gate) or the
     * real DCT pHash from [[phashImages]] — through the identical
-    * chunk split + capped bucket join + xor verify. */
+    * chunk split + capped bucket step + xor verify. */
   def phashPairsFrom(hashes: DataFrame, maxHamming: Int = 12): DataFrame = {
     val chunks = hashes
       .select(col("doc_id"), col("ph").as("n"),

@@ -32,8 +32,8 @@ import graft.functions.{textops, vectors}
   *    (three-level); the guards stay loud at the new cliff.
   *
   * Composite cell id = coarse_rank · [[FineStride]] + fid — a plain
-  * BIGINT, so everything downstream (occupancy-capped
-  * [[Dedup.bucketedPairs]], the d10 `partitionBy(cell)` layout and its
+  * BIGINT, so everything downstream (the [[Dedup.cappedBuckets]]
+  * bucket step, the d10 `partitionBy(cell)` layout and its
   * planning-time pruning) is unchanged.
   *
   * Scale notes: the broadcast fine-book table is Σk_f·dim doubles

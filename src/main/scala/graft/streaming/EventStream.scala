@@ -191,31 +191,14 @@ object EventStream {
         catch { case _: org.apache.spark.sql.AnalysisException => () } // static conf
     }
 
-  /** Phase timings (seconds) of the LAST invocation of each streaming
-    * gate in this JVM: gate prefix (s1..s10) → (startup, maintain).
-    * `startup` = scratch wipe + child session + gate pre-work
-    * (cutoff/index ensure) + stream plan build + `.start()`;
-    * `maintain` = awaitTermination — the micro-batch work itself. The
-    * SERVE side is whatever the caller measures executing the
-    * returned DataFrame. Together the three split a streaming gate's
-    * wall-clock into harness fixed overhead vs real plan work, so a
-    * genuine maintenance/serve regression can't hide inside (or be
-    * faked by) stream-startup noise — BASELINE's streaming-phase
-    * table; Bench records it under SPARK_GRAFT_BENCH_STREAM_PHASES. */
-  val lastPhases = new java.util.concurrent.ConcurrentHashMap[
-    String, (Double, Double)]()
-
-  /** Times awaitTermination as the maintain phase and everything from
-    * `t0` to the stream's start as the startup phase. With
-    * SPARK_GRAFT_STREAM_PROGRESS set, also dumps each micro-batch's
-    * progress JSON (durationMs breakdown: addBatch / getBatch /
-    * queryPlanning / walCommit / commitOffsets / stateOperators) to
-    * stderr — the per-batch attribution an optimization pass reads. */
-  private def awaitWithPhases(gate: String, t0: Long,
+  /** Waits for the stream to finish. With SPARK_GRAFT_STREAM_PROGRESS
+    * set, also dumps each micro-batch's progress JSON (durationMs
+    * breakdown: addBatch / getBatch / queryPlanning / walCommit /
+    * commitOffsets / stateOperators) to stderr — the per-batch
+    * attribution an optimization pass reads. */
+  private def await(gate: String,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val t1 = System.nanoTime()
     q.awaitTermination()
-    lastPhases.put(gate, ((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
     if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
       q.recentProgress.foreach(p =>
         System.err.println(s"[stream-progress] $gate ${p.json}"))
@@ -245,7 +228,6 @@ object EventStream {
   private def runAvailableNow(s: SparkSession, gate: String, d: String,
       stateParts: Int = 8, noDataBatch: Boolean = true)
       (build: SparkSession => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
     // Sanitized dataset path (not hashCode) keys the subdir: unique per
     // dataset, stable across runs of this process.
     val root = scratchRoot.resolve(
@@ -264,7 +246,7 @@ object EventStream {
       .outputMode(OutputMode.Append)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    awaitWithPhases(gate, t0, q)
+    await(gate, q)
     // The s2/s3 oracles assume every source file lands in ONE data
     // micro-batch (in-batch session closure / dedup scope is
     // batch-global only then). FileStreamSource's default AvailableNow
@@ -500,7 +482,6 @@ object EventStream {
     * c15), then c15's served daily report — the oracle applies
     * verbatim. */
   def s9Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s9-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -512,7 +493,7 @@ object EventStream {
     val layout = root.resolve("layout").toString
     val q = ttlMaintain(streamEvents(ss, d), layout, cutoff,
       root.resolve("ckpt").toString)
-    awaitWithPhases("s9", t0, q)
+    await("s9", q)
     graft.operators.Ttl.servedDaily(s, layout)
   }
 
@@ -550,7 +531,6 @@ object EventStream {
     * splitting), [[deleteMaintain]] drains it, then c20's served
     * report — the oracle applies verbatim. */
   def s11Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s11-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -569,7 +549,7 @@ object EventStream {
       .schema("user_id BIGINT")
       .parquet(root.resolve("requests").toString)
     val q = deleteMaintain(src, layout, root.resolve("ckpt").toString)
-    awaitWithPhases("s11", t0, q)
+    await("s11", q)
     graft.operators.Mutation.servedReport(s, layout)
   }
 
@@ -605,7 +585,6 @@ object EventStream {
     * sink, then serve c22's top-k selection from the accumulated
     * scores — the oracle is c22's verbatim. */
   def s12Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s12-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -618,7 +597,7 @@ object EventStream {
     val src = ss.readStream.schema(raw.schema).parquet(s"$d/documents*.parquet")
     val q = scoreMaintain(src, model, root.resolve("scores").toString,
       root.resolve("ckpt").toString)
-    awaitWithPhases("s12", t0, q)
+    await("s12", q)
     graft.operators.Dsir.selectTop(
       s.read.parquet(root.resolve("scores").toString))
   }
@@ -665,7 +644,6 @@ object EventStream {
     * construction (pinned by the two-batch suite test), so the c10
     * oracle applies verbatim. */
   def s8Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s8-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -676,7 +654,7 @@ object EventStream {
     val parts = root.resolve("parts").toString
     val q = upsertMaintain(streamEvents(ss, d), parts,
       root.resolve("ckpt").toString)
-    awaitWithPhases("s8", t0, q)
+    await("s8", q)
     graft.operators.Replacing.finalReport(s.read.parquet(parts))
   }
 
@@ -687,7 +665,6 @@ object EventStream {
     * batch-split-invariant by construction (pinned by the two-batch
     * suite test), so the c9 oracle applies verbatim. */
   def s7Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s7-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -698,7 +675,7 @@ object EventStream {
     val out = root.resolve("rollup").toString
     val q = rollupMaintain(streamEvents(ss, d), out,
       root.resolve("ckpt").toString)
-    awaitWithPhases("s7", t0, q)
+    await("s7", q)
     graft.operators.Rollup.servedWithContract(s, d, out)
   }
 
@@ -708,7 +685,6 @@ object EventStream {
     * freshness check); no single-data-batch `require` — s6's output is
     * batch-split-invariant by construction. */
   def s6Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s6-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -721,7 +697,7 @@ object EventStream {
     val src = ss.readStream.schema(raw.schema).parquet(s"$d/documents*.parquet")
     val q = ingestDedup(graft.operators.Dedup.d8Shard(src), d,
       root.resolve("out").toString, root.resolve("ckpt").toString)
-    awaitWithPhases("s6", t0, q)
+    await("s6", q)
     s.read.parquet(root.resolve("out").toString)
       .orderBy(col("shard_doc"), col("corpus_doc"))
   }
@@ -772,7 +748,6 @@ object EventStream {
     * bucket-pruned search served from the streamed layout. Oracle =
     * t8's verbatim (split-invariance makes them the same corpus). */
   def s10Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s10-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -784,7 +759,7 @@ object EventStream {
     val src = ss.readStream.schema(raw.schema).parquet(s"$d/documents*.parquet")
     val q = indexMaintain(src, root.resolve("idx").toString,
       root.resolve("ckpt").toString)
-    awaitWithPhases("s10", t0, q)
+    await("s10", q)
     graft.operators.InvertedIndex.searchIndex(
       s.read.parquet(root.resolve("idx").toString))
   }
@@ -826,7 +801,6 @@ object EventStream {
     * Oracle = t11's verbatim (split-invariance makes them the same
     * corpus). */
   def s13Query(s: SparkSession, d: String): DataFrame = {
-    val t0 = System.nanoTime()
     val root = scratchRoot.resolve(
       "s13-" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     wipe(root)
@@ -838,7 +812,7 @@ object EventStream {
     val src = ss.readStream.schema(raw.schema).parquet(s"$d/documents*.parquet")
     val q = posIndexMaintain(src, root.resolve("idx").toString,
       root.resolve("ckpt").toString)
-    awaitWithPhases("s13", t0, q)
+    await("s13", q)
     graft.operators.InvertedIndex.phraseSearch(
       s.read.parquet(root.resolve("idx").toString))
   }

@@ -16,6 +16,11 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
+  /** Jobs a `collect()` of d2 / d5 starts at TinySf, as measured on the
+    * occupancy-join plan the bounded collect replaced. */
+  private val D2Jobs = 7
+  private val D5Jobs = 5
+
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, SparkSpec.TinySf)
       .queryExecution.executedPlan.toString
@@ -69,22 +74,89 @@ class PlanAuditSpec extends SparkSpec {
     plan("c6_contamination") should include("BroadcastHashJoin")
   }
 
-  test("dedup occupancy caps are co-partitioned hash joins, not sorts or broadcasts") {
-    // the surviving-bucket list grows with the corpus (it is NOT
-    // broadcastable at scale), and sort-merge would re-sort every
-    // posting row — candidate generation must show a shuffled hash
-    // join and no sort-merge join (d5's later exact-verify id-joins
-    // are separate equi-joins and may plan as the optimizer likes, so
-    // it only pins the ShuffledHashJoin presence)
+  /** Every node of a physical plan, reaching into AQE query stages;
+    * a reused exchange is a leaf (its child is the exchange it reuses,
+    * already visited where it first ran). */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      nodes(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      q +: nodes(q.plan)
+    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  test("near-dup bucket steps are one bounded collect: no join below it, no sort-merge") {
+    // every pair query caps its buckets with collect_up_to right after
+    // the exchange on the bucket key; no join sits between them (the
+    // occupancy count ⋈ postings step it replaced), and no sort-merge
+    // join re-sorts posting rows anywhere in the plan
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    def toExchange(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+      case e: ShuffleExchangeExec => Seq(e)
+      case c => c +: toExchange(c)
+    }
     Seq("d2_ngram_jaccard", "d3_minhash_lsh", "d4_simhash",
-      "d7_containment", "m4_phash_neardup").foreach { q =>
+      "d5_embedding_neardup", "d7_containment", "d9_semdedup",
+      "m4_phash_neardup").foreach { q =>
       withClue(q) {
-        val p = plan(q)
-        p should include("ShuffledHashJoin")
-        p should not include "SortMergeJoin"
+        val p = nodes(SparkEntry.queries(q)(spark, SparkSpec.TinySf)
+          .queryExecution.executedPlan)
+        val capped = p.collect { case agg: ObjectHashAggregateExec
+          if agg.aggregateExpressions.exists(
+            _.aggregateFunction.prettyName == "collect_up_to") => agg }
+        capped should not be empty
+        capped.foreach { agg =>
+          val below = toExchange(agg)
+          below.last shouldBe a[ShuffleExchangeExec]
+          below.collect {
+            case j @ (_: ShuffledHashJoinExec | _: SortMergeJoinExec |
+                _: BroadcastHashJoinExec) => j
+          } shouldBe empty
+        }
+        p.collect { case j: SortMergeJoinExec => j } shouldBe empty
       }
     }
-    plan("d5_embedding_neardup") should include("ShuffledHashJoin")
+  }
+
+  test("d2/d5 executed plans: one source scan, no reused exchange, same job count") {
+    // the bucket step shares nothing by exchange reuse: the final AQE
+    // plan reads the source once and holds no ReusedExchange, in as
+    // many jobs as the occupancy-join plan it replaced
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    Seq("d2_ngram_jaccard" -> ("documents.parquet", D2Jobs),
+      "d5_embedding_neardup" -> ("embeddings.parquet", D5Jobs)).foreach {
+      case (q, (source, wantJobs)) =>
+        withClue(q) {
+          val df = SparkEntry.queries(q)(spark, SparkSpec.TinySf)
+          val jobs = new AtomicInteger()
+          val l = new SparkListener {
+            override def onJobStart(j: SparkListenerJobStart): Unit = {
+              jobs.incrementAndGet(); ()
+            }
+          }
+          val sc = spark.sparkContext
+          ListenerBusDrain(sc)
+          sc.addSparkListener(l)
+          try { df.collect(); ListenerBusDrain(sc) }
+          finally sc.removeSparkListener(l)
+          val p = nodes(df.queryExecution.executedPlan)
+          info(s"$q: ${jobs.get} jobs")
+          p.collect { case r: ReusedExchangeExec => r } shouldBe empty
+          p.collect { case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(source)) => s
+          } should have size 1
+          jobs.get shouldBe wantJobs
+        }
+    }
   }
 
   test("dedup candidate joins stay on equi-keys (no nested-loop fallback)") {

@@ -69,6 +69,12 @@ class DedupSpec extends SparkSpec {
     // emitting df²/2 candidate pairs at corpus scale
     val many = (0L until 120L).map((_, baseText)).toDF("doc_id", "text")
     Dedup.ngramJaccard(many).collect() shouldBe empty
+    // the boundary: df = MaxShingleDf keeps every pair, df = cap + 1
+    // (the bounded collect's limit) drops the bucket
+    def copies(n: Long) = (0L until n).map((_, baseText)).toDF("doc_id", "text")
+    Dedup.MaxShingleDf shouldBe 100
+    Dedup.ngramJaccard(copies(100L)).count() shouldBe 100L * 99 / 2
+    Dedup.ngramJaccard(copies(101L)).collect() shouldBe empty
   }
 
   test("minhashLsh: identical docs collide in all bands") {
