@@ -130,10 +130,9 @@ object Dedup {
       graft.functions.texthash.shingleHash60s(
         textops.tokens(col("text"))).as("hvs"))
 
-  /** The bucket step of every near-dup pair query (d2–d5, d7, d9, m4)
-    * and of d8's posting build: `rows` (keyCols…, payload columns) →
-    * one row per bucket whose occupancy lies in [minDf, cap], holding
-    * the bucket's payloads as `ds`.
+  /** The bucket step of every near-dup pair query (d2–d5, d7, d9,
+    * m4): `rows` (keyCols…, payload columns) → one row per bucket of
+    * 2..cap rows, holding the bucket's payloads as `ds`.
     *
     *  - ONE exchange: the rows are hashed on the bucket key, and the
     *    collect and whatever the caller does per bucket (the pair
@@ -150,14 +149,14 @@ object Dedup {
     * Never a self-join on the bucket key: that sorts the posting rows
     * twice and re-shuffles pairs the bucket already holds locally. */
   private[operators] def cappedBuckets(rows: DataFrame, keyCols: Seq[String],
-      payload: Column, cap: Int, minDf: Int = 2): DataFrame = {
+      payload: Column, cap: Int): DataFrame = {
     val s = rows.sparkSession
     graft.functions.collectupto.register(s)
     val key = keyCols.map(col)
     rows.repartition(s.sessionState.conf.numShufflePartitions, key: _*)
       .groupBy(key: _*)
       .agg(graft.functions.collectupto.collectUpTo(payload, cap + 1).as("ds"))
-      .filter(size(col("ds")).between(minDf, cap))
+      .filter(size(col("ds")).between(2, cap))
   }
 
   /** Candidate pairs shared by d2/d7 (shingle postings), d3 (LSH band
@@ -833,11 +832,12 @@ object Dedup {
     // cap drops the same population statistically; residual df drift
     // across batches remains the documented LSM trade, folded back at
     // the periodic full rebuild.
-    def postings(docs: DataFrame, cap: Int = MaxShingleDf): DataFrame = {
+    def postings(docs: DataFrame, cap: Long = MaxShingleDf): DataFrame = {
       val ex = docShingles(docs)
         .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
-      cappedBuckets(ex, Seq("g"), struct(col("doc_id"), col("n")), cap, minDf = 1)
-        .select(col("g"), inline(col("ds")))
+      val live = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= cap).select(col("g"))
+      ex.join(live.hint("shuffle_hash"), Seq("g"))
     }
     def setMarker(ndocs: Long): Unit = {
       s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
@@ -864,8 +864,8 @@ object Dedup {
         val shardN = shard.count()
         val priorN = storedNdocs().getOrElse(
           math.max(1L, Tables.documents(s, d).count() - shardN))
-        val cap = math.round(MaxShingleDf.toDouble * shardN / math.max(1L, priorN))
-          .max(1L).min(Int.MaxValue - 1L).toInt
+        val cap = math.max(1L,
+          math.round(MaxShingleDf.toDouble * shardN / math.max(1L, priorN)))
         postings(shard, cap)
           .repartition(buckets, col("g"))
           .write.mode("append")

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.execution.{CommandResultExec, GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Physical-plan check for generator-input re-evaluation.
   *
@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * applies to any executed plan: `ExplainQ --audit` runs it over every
   * registered query, and the test session runs it on every plan a spec
   * executes. */
-object GeneratorLint {
+object GeneratorLint extends AdaptiveSparkPlanHelper {
 
   /** One line per (generator input, re-evaluating operator) pair; empty
     * for a clean plan. */
@@ -45,9 +45,7 @@ object GeneratorLint {
   }
 
   private def inner(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case q: QueryStageExec => Seq(q.plan)
     case c: CommandResultExec => Seq(c.commandPhysicalPlan)
-    case _ => p.children
+    case _ => allChildren(p)
   }
 }

@@ -14,7 +14,8 @@ package graft
   * per-scale (shuffle vs broadcast for the customer join at sf0.001)
   * are left to it.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   /** Jobs a `collect()` of d2 / d5 starts at TinySf, as measured on the
     * occupancy-join plan the bounded collect replaced. */
@@ -74,19 +75,6 @@ class PlanAuditSpec extends SparkSpec {
     plan("c6_contamination") should include("BroadcastHashJoin")
   }
 
-  /** Every node of a physical plan, reaching into AQE query stages;
-    * a reused exchange is a leaf (its child is the exchange it reuses,
-    * already visited where it first ran). */
-  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      nodes(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      q +: nodes(q.plan)
-    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   test("near-dup bucket steps are one bounded collect: no join below it, no sort-merge") {
     // every pair query caps its buckets with collect_up_to right after
     // the exchange on the bucket key; no join sits between them (the
@@ -96,7 +84,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-    def toExchange(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+    def toExchange(p: SparkPlan): Seq[SparkPlan] = allChildren(p).flatMap {
       case e: ShuffleExchangeExec => Seq(e)
       case c => c +: toExchange(c)
     }
@@ -104,9 +92,9 @@ class PlanAuditSpec extends SparkSpec {
       "d5_embedding_neardup", "d7_containment", "d9_semdedup",
       "m4_phash_neardup").foreach { q =>
       withClue(q) {
-        val p = nodes(SparkEntry.queries(q)(spark, SparkSpec.TinySf)
-          .queryExecution.executedPlan)
-        val capped = p.collect { case agg: ObjectHashAggregateExec
+        val p = SparkEntry.queries(q)(spark, SparkSpec.TinySf)
+          .queryExecution.executedPlan
+        val capped = collect(p) { case agg: ObjectHashAggregateExec
           if agg.aggregateExpressions.exists(
             _.aggregateFunction.prettyName == "collect_up_to") => agg }
         capped should not be empty
@@ -118,7 +106,7 @@ class PlanAuditSpec extends SparkSpec {
                 _: BroadcastHashJoinExec) => j
           } shouldBe empty
         }
-        p.collect { case j: SortMergeJoinExec => j } shouldBe empty
+        collect(p) { case j: SortMergeJoinExec => j } shouldBe empty
       }
     }
   }
@@ -148,10 +136,10 @@ class PlanAuditSpec extends SparkSpec {
           sc.addSparkListener(l)
           try { df.collect(); ListenerBusDrain(sc) }
           finally sc.removeSparkListener(l)
-          val p = nodes(df.queryExecution.executedPlan)
+          val p = df.queryExecution.executedPlan
           info(s"$q: ${jobs.get} jobs")
-          p.collect { case r: ReusedExchangeExec => r } shouldBe empty
-          p.collect { case s: FileSourceScanExec
+          collect(p) { case r: ReusedExchangeExec => r } shouldBe empty
+          collect(p) { case s: FileSourceScanExec
             if s.relation.location.rootPaths.exists(_.toString.contains(source)) => s
           } should have size 1
           jobs.get shouldBe wantJobs
