@@ -15,52 +15,54 @@ object Tables {
     * re-runs footer schema inference as a driver JOB on every call,
     * and every query pays it once per input table (measured r22: 135
     * such jobs, ~4 s of stage wall, in ONE timed pass over the query
-    * surface at sf0.1). Keyed on (absolute path, mtime, size) so a
-    * rewritten or grown corpus re-infers instead of serving a stale
-    * schema; non-local paths (no stat available) skip the memo rather
-    * than trust an unverifiable key. Caches only the SCHEMA — every
-    * read still scans the parquet data itself. Assumes all sessions
-    * in the JVM share the parquet-read confs (nanosAsLong,
-    * inferTimestampNTZ) GraftSession pins — true for every entry
-    * point and test harness in this repo. */
+    * surface at sf0.1). Keyed on the absolute path, the table's
+    * data-file manifest ([[graft.sources.LocalIndex.dataManifest]]:
+    * path, length and mtime of every data file) and the session's
+    * schema-inference confs, so a part file replaced in place re-infers
+    * whatever the directory's own mtime says, and a session that reads
+    * parquet differently infers for itself; non-local paths (no stat
+    * available) skip the memo rather than trust an unverifiable key.
+    * Caches only the SCHEMA — every read still scans the parquet data
+    * itself. */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+    (String, Seq[String], Seq[String]), org.apache.spark.sql.types.StructType]()
+
+  private def localFile(p: String) =
+    new java.io.File(if (p.startsWith("file:")) p.stripPrefix("file:") else p)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    val f = new java.io.File(
-      if (p.startsWith("file:")) p.stripPrefix("file:") else p)
+    val f = localFile(p)
     if (f.exists) {
-      val key = (f.getAbsolutePath, f.lastModified, f.length)
+      val key = (f.getAbsolutePath,
+        graft.sources.LocalIndex.dataManifest(Seq(f.getPath)),
+        graft.sources.LayoutCatalog.readConfs(spark))
       val sch = schemaMemo.computeIfAbsent(key,
         _ => spark.read.parquet(p).schema)
       spark.read.schema(sch).parquet(p)
     } else spark.read.parquet(p)
   }
 
-  /** Memoized read of an ENGINE-WRITTEN layout directory (posting /
-    * ANN / rollup / parts layouts): same memo as [[load]], same
-    * measured cost (one footer-inference driver job per
-    * `spark.read.parquet` call, ~28 ms each; every index/rollup serve
-    * pays 1–2). Staleness argument, layout-specific: a layout's
-    * schema changes ONLY via rebuild or compaction, and both go
-    * through tmp-build + atomic swap of the directory itself — a new
-    * dir inode, new mtime, new memo key. Appends land new FILES (in
-    * the dir or its partition subdirs) with the same columns by the
-    * layouts' append contract, so a memo hit over an append is
-    * correct; partition-column types are engine-assigned ints,
-    * identical across appends. Data is still read from disk on every
-    * query — only the schema is cached. */
-  def loadLayout(spark: SparkSession, dir: String): DataFrame = {
-    val f = new java.io.File(
-      if (dir.startsWith("file:")) dir.stripPrefix("file:") else dir)
-    if (f.isDirectory) {
-      val key = (f.getAbsolutePath, f.lastModified, f.length)
-      val sch = schemaMemo.computeIfAbsent(key,
-        _ => spark.read.parquet(dir).schema)
-      spark.read.schema(sch).parquet(dir)
-    } else spark.read.parquet(dir)
-  }
+  /** Read of an ENGINE-WRITTEN layout directory (posting / ANN / rollup
+    * / parts layouts). A layout that carries a generation stamp is
+    * served from its [[graft.sources.LayoutCatalog]] entry, so a warm
+    * request lists no file and runs no schema inference; the entry's
+    * key changes with every build, append, compaction and swap (the
+    * catalog's invariant). A layout with no stamp (one a streaming
+    * maintainer writes, say) is read from the directory, its schema
+    * memoized on the directory's (mtime, size) and the session's
+    * schema-inference confs. */
+  def loadLayout(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.LayoutCatalog.load(spark, dir).getOrElse {
+      val f = localFile(dir)
+      if (f.isDirectory) {
+        val key = (f.getAbsolutePath, Seq(f.lastModified.toString, f.length.toString),
+          graft.sources.LayoutCatalog.readConfs(spark))
+        val sch = schemaMemo.computeIfAbsent(key,
+          _ => spark.read.parquet(dir).schema)
+        spark.read.schema(sch).parquet(dir)
+      } else spark.read.parquet(dir)
+    }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")

@@ -714,8 +714,10 @@ object Ann {
     * dequantizing inside the codegen loop, as vq2 does) only RANK
     * candidates; the top [[RerankDepth]] per query are re-scored
     * exactly against the float IVF index, pruned to the same probed
-    * cells with a broadcast vec_id join (≤ R·queries rows — a point
-    * read, never a corpus scan). Scan bytes stay int8-dominated
+    * cells and to the candidate vec_ids ([[refineStage]]: an `InSet`
+    * over the collected candidates for one query, a broadcast vec_id
+    * join for several — ≤ R·queries rows, a point read, never a corpus
+    * scan). Scan bytes stay int8-dominated
     * (probed cells at ¼ width for the ranking pass + R point rows of
     * float), and the answer carries EXACT distances — quantization
     * bounds what can be MISSED (a true neighbor pushed below rank R),
@@ -753,26 +755,39 @@ object Ann {
   }
 
   /** The shared float refine stage ([[quantizedIvfKnn]] / [[ivfPqKnn]]):
-    * re-score `cand` rows (query_id, vec_id — ≤ RerankDepth per
-    * query, broadcast: computed, so it is the one broadcast job) exactly
-    * against the float IVF index, pruned to the same probed cells, and
-    * keep the top k. The query vector is read per row as
-    * `element_at(typedlit(query_id → qv), query_id)` — a plan literal,
-    * so the rank cut upstream carries only (query_id, vec_id, score)
-    * and no query table is broadcast. The refine read is a vec_id
-    * point join inside probed cells — candidate-bounded, never a
-    * corpus scan — and [[topKPerQuery]] bounds its final sort by k·nq
-    * rows. */
+    * re-score `cand` rows (query_id, vec_id — ≤ rerank depth per query)
+    * exactly against the float IVF index, pruned to the same probed
+    * cells, and keep the top k. The refine read is candidate-bounded,
+    * never a corpus scan, and [[topKPerQuery]] bounds its final sort by
+    * k·nq rows.
+    *
+    *  - nq = 1: the candidate vec_ids are collected here, on the driver
+    *    (the request's first job), and the refine is a scan of the
+    *    probed cells filtered by an `InSet` on vec_id, scored against
+    *    the literal query vector. That plan has no exchange, so no AQE
+    *    stage boundary or broadcast waits between the two jobs.
+    *  - nq > 1: `cand` is broadcast (computed, so it is the one
+    *    broadcast job) and joined on vec_id; the query vector is read
+    *    per row as `element_at(typedlit(query_id → qv), query_id)`, a
+    *    plan literal, so no query table is broadcast. */
   private def refineStage(s: SparkSession, d: String, cand: DataFrame,
       queryVecs: Seq[(Int, Seq[Double])], probedCells: Seq[Long],
-      k: Int): DataFrame =
-    l2TopK(
-      Tables.loadLayout(s, ensureIvfIndex(s, d))
-        .filter(col("cid").isin(probedCells: _*))
-        .select(col("vec_id"), col("embedding"))
-        .join(broadcast(cand), Seq("vec_id")),
-      k, queryVecs.size,
-      qv = element_at(typedlit(queryVecs.toMap), col("query_id")))
+      k: Int): DataFrame = {
+    val cells = Tables.loadLayout(s, ensureIvfIndex(s, d))
+      .filter(col("cid").isin(probedCells: _*))
+    queryVecs match {
+      case Seq((qid, qv)) =>
+        val ids = cand.select(col("vec_id")).collect().map(_.getLong(0))
+        l2TopK(cells.filter(col("vec_id").isin(ids.toSeq: _*))
+            .select(lit(qid).as("query_id"), col("vec_id"), col("embedding")),
+          k, 1, qv = typedlit(qv))
+      case _ =>
+        l2TopK(cells.select(col("vec_id"), col("embedding"))
+            .join(broadcast(cand), Seq("vec_id")),
+          k, queryVecs.size,
+          qv = element_at(typedlit(queryVecs.toMap), col("query_id")))
+    }
+  }
 
   // ------------------------------------------------------- vq4: IVF-PQ
 

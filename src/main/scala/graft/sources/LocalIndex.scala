@@ -39,35 +39,43 @@ object LocalIndex {
     }.mkString("||")
 
   /** Run `build(dir)` iff the cache is absent or stale, then publish
-    * the fingerprint marker `_GRAFT_SRC` ATOMICALLY (temp file +
-    * rename): a concurrent process sees either no marker — and
-    * rebuilds, an idempotent overwrite — or a complete one; never a
-    * torn half-written fingerprint that could validate a partial
-    * index. `_SUCCESS` (written by Spark) marks data completeness,
-    * `_GRAFT_SRC` marks source match; freshness requires both. */
+    * the fingerprint marker `_GRAFT_SRC` and a fresh generation
+    * ([[republish]]). `_SUCCESS` (written by Spark) marks data
+    * completeness, `_GRAFT_SRC` marks source match; freshness requires
+    * both. Calls for one directory run one at a time in this JVM, so
+    * concurrent callers on a cold directory run one build. */
   def ensure(kind: String, d: String, suffix: String, fp: String)
             (build: String => Unit): String = {
     val dir = path(kind, d, suffix)
-    val src = Paths.get(dir, "_GRAFT_SRC")
-    val fresh = new java.io.File(dir, "_SUCCESS").exists() &&
-      Files.exists(src) &&
-      new String(Files.readAllBytes(src), "UTF-8") == fp
-    if (!fresh) {
-      build(dir)
-      val tmp = Files.createTempFile(Paths.get(dir), "_GRAFT_SRC", ".tmp")
-      Files.write(tmp, fp.getBytes("UTF-8"))
-      try Files.move(tmp, src,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-        // non-POSIX tmpdir: plain replace keeps correctness (the
-        // reader re-validates content), only the no-torn-write
-        // guarantee weakens
-        Files.move(tmp, src, StandardCopyOption.REPLACE_EXISTING)
-      }
-      ()
+    LayoutCatalog.locked(dir) {
+      val src = Paths.get(dir, "_GRAFT_SRC")
+      val fresh = new java.io.File(dir, "_SUCCESS").exists() &&
+        Files.exists(src) &&
+        new String(Files.readAllBytes(src), "UTF-8") == fp
+      if (!fresh) republish(dir, fp)(build(dir)) else adopt(dir)
     }
     dir
   }
+
+  /** The one way a managed layout changes: under the directory's lock,
+    * retire its generation and its marker, run `change`, then publish
+    * `marker` (temp file + atomic rename) and a fresh generation
+    * ([[LayoutCatalog]]). A `change` that throws leaves the layout with
+    * neither, so no reader retains it and the next ensure rebuilds it
+    * from source; it is never appended to again. */
+  private def republish(dir: String, marker: String)(change: => Unit): Unit = {
+    LayoutCatalog.unstamp(dir)
+    Files.deleteIfExists(Paths.get(dir, "_GRAFT_SRC"))
+    change
+    writeMarker(dir, marker)
+    LayoutCatalog.stamp(dir)
+  }
+
+  /** Stamps a fresh layout that carries no generation yet (one written
+    * before layouts were stamped): under the lock its files are the
+    * ones its marker vouches for. */
+  private def adopt(dir: String): Unit =
+    if (LayoutCatalog.generation(dir).isEmpty) LayoutCatalog.stamp(dir)
 
   /** Per-DATA-FILE manifest of the source paths: one `abspath:len:mtime`
     * entry per data file, sorted, metadata files (`_SUCCESS`, `.crc`,
@@ -86,6 +94,10 @@ object LocalIndex {
         .map(x => s"${x.getAbsolutePath}:${x.length}:${x.lastModified}")
     }.sorted
 
+  /** Writes the `_GRAFT_SRC` marker atomically (temp file + rename):
+    * a concurrent process sees either no marker (and rebuilds, an
+    * idempotent overwrite) or a complete one, never a torn fingerprint
+    * that could validate a partial index. */
   private def writeMarker(dir: String, content: String): Unit = {
     val src = Paths.get(dir, "_GRAFT_SRC")
     val tmp = Files.createTempFile(Paths.get(dir), "_GRAFT_SRC", ".tmp")
@@ -93,6 +105,8 @@ object LocalIndex {
     try Files.move(tmp, src,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
+      // non-POSIX tmpdir: plain replace keeps correctness (the reader
+      // re-validates content), only the no-torn-write guarantee weakens
       Files.move(tmp, src, StandardCopyOption.REPLACE_EXISTING)
     }
     ()
@@ -140,31 +154,31 @@ object LocalIndex {
                        (build: String => Unit)
                        (append: (Seq[String], String) => Unit): String = {
     val dir = path(kind, d, suffix)
-    val now = dataManifest(sources)
-    val marker = extra + "##" + now.mkString("|")
-    val src = Paths.get(dir, "_GRAFT_SRC")
-    val stored =
-      if (new java.io.File(dir, "_SUCCESS").exists() && Files.exists(src))
-        Some(new String(Files.readAllBytes(src), "UTF-8"))
-      else None
-    val storedParts = stored.map { m =>
-      val i = m.lastIndexOf("##")
-      if (i < 0) ("", Seq.empty[String])
-      else (m.take(i),
-        m.drop(i + 2).split('|').toSeq.filter(_.nonEmpty))
-    }
-    storedParts match {
-      case Some((ex, old)) if ex == extra && old == now => // fresh
-      case Some((ex, old)) if ex == extra && old.nonEmpty &&
-          old.forall(now.contains) =>
-        val newFiles = now.filterNot(old.contains)
-          // strip the trailing :len:mtime (the path itself may hold ':')
-          .map(e => e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1)))
-        if (newFiles.nonEmpty) append(newFiles, dir)
-        writeMarker(dir, marker)
-      case _ =>
-        build(dir)
-        writeMarker(dir, marker)
+    LayoutCatalog.locked(dir) {
+      val now = dataManifest(sources)
+      val marker = extra + "##" + now.mkString("|")
+      val src = Paths.get(dir, "_GRAFT_SRC")
+      val stored =
+        if (new java.io.File(dir, "_SUCCESS").exists() && Files.exists(src))
+          Some(new String(Files.readAllBytes(src), "UTF-8"))
+        else None
+      val storedParts = stored.map { m =>
+        val i = m.lastIndexOf("##")
+        if (i < 0) ("", Seq.empty[String])
+        else (m.take(i),
+          m.drop(i + 2).split('|').toSeq.filter(_.nonEmpty))
+      }
+      storedParts match {
+        case Some((ex, old)) if ex == extra && old == now => adopt(dir)
+        case Some((ex, old)) if ex == extra && old.nonEmpty &&
+            old.forall(now.contains) =>
+          val newFiles = now.filterNot(old.contains)
+            // strip the trailing :len:mtime (the path itself may hold ':')
+            .map(e => e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1)))
+          republish(dir, marker)(if (newFiles.nonEmpty) append(newFiles, dir))
+        case _ =>
+          republish(dir, marker)(build(dir))
+      }
     }
     dir
   }

@@ -11,19 +11,25 @@ package graft.streaming
   */
 object Compaction {
 
-  /** Rewrite `dir` via a sibling tmp build + swap. Safe for the
-    * single-writer `foreachBatch` loop (batches are serialized; serves
-    * in the gates run after the stream drains). A multi-reader
-    * production layout would swap via a manifest instead — the
-    * [[graft.sources.LocalIndex]] staleness pattern. */
-  def rewrite(dir: String)(build: String => Unit): Unit = {
-    val tmp = new java.io.File(dir + ".compacting")
-    rm(tmp)
-    build(tmp.toString)
-    val live = new java.io.File(dir)
-    rm(live)
-    require(tmp.renameTo(live), s"compaction swap failed for $dir")
-  }
+  /** Rewrite `dir` via a sibling tmp build + swap, holding the
+    * layout's lock ([[graft.sources.LayoutCatalog.locked]]). A layout
+    * that carried a generation stamp gets a fresh one in the swapped
+    * directory: the stamp leaves the live directory before its files
+    * do, so no reader of this JVM retains a half-deleted layout, and
+    * the swapped files are never served under the old generation. An
+    * unstamped layout stays unstamped. */
+  def rewrite(dir: String)(build: String => Unit): Unit =
+    graft.sources.LayoutCatalog.locked(dir) {
+      val stamped = graft.sources.LayoutCatalog.generation(dir).isDefined
+      val tmp = new java.io.File(dir + ".compacting")
+      rm(tmp)
+      build(tmp.toString)
+      if (stamped) graft.sources.LayoutCatalog.stamp(tmp.toString)
+      graft.sources.LayoutCatalog.unstamp(dir)
+      val live = new java.io.File(dir)
+      rm(live)
+      require(tmp.renameTo(live), s"compaction swap failed for $dir")
+    }
 
   private def rm(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rm)

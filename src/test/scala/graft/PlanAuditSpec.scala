@@ -741,6 +741,42 @@ class PlanAuditSpec extends SparkSpec
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("vq3/vq4 refine: no broadcast at one query, the broadcast join at five") {
+    // nq = 1: the candidate vec_ids are collected in the builder and the
+    // refine is an InSet-pruned scan, so its plan holds no exchange of
+    // any kind (no AQE stage boundary either); nq = 5 keeps the
+    // broadcast vec_id join of the candidate set
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import graft.operators.{Ann, VectorSearch}
+    val d = SparkSpec.TinySf
+    def surfaces(q: Seq[(Int, Seq[Double])]) = Seq[(String, () => DataFrame)](
+      "quantizedIvfKnn" -> (() => Ann.quantizedIvfKnn(spark, d, queryVecs = q)),
+      "ivfPqKnn" -> (() => Ann.ivfPqKnn(spark, d, queryVecs = q)))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      surfaces(Seq((0, VectorSearch.qvec(42)))).foreach { case (surface, df) =>
+        val exec = df().queryExecution.executedPlan
+        withClue(s"$surface nq=1:\n$exec") {
+          exec.collect { case e: Exchange => e } shouldBe empty
+          exec.collect { case f: FilterExec => f.condition.collect { case i: InSet => i } }
+            .flatten should not be empty
+        }
+      }
+      surfaces((0 until 5).map(i => (i, VectorSearch.qvec(42 + i)))).foreach {
+        case (surface, df) =>
+          val exec = df().queryExecution.executedPlan
+          withClue(s"$surface nq=5:\n$exec") {
+            exec.collect { case b: BroadcastExchangeExec => b } should not be empty
+            exec.toString should include("BroadcastHashJoin")
+          }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("c15 TTL serve path is a scan of the surviving partitions only") {
     // the gate query must READ the post-expiry layout — one parquet
     // scan, no write job in the serve plan, no join

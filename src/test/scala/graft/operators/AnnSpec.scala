@@ -263,6 +263,28 @@ class AnnSpec extends SparkSpec {
   /** Recursive (path → (length, mtime)) snapshot of the DATA files of
     * an index dir (markers/_SUCCESS excluded — they legitimately
     * update on append). */
+  test("a single-query vq3/vq4 request answers exactly its rows of the batched request") {
+    // nq = 1 refines over an InSet of collected candidates, nq > 1 over
+    // the broadcast join: the two plans must agree row for row
+    vectors.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft-vq-nq1-").toString
+    corpus(400).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Int]("query_id"), r.getAs[Long]("vec_id"),
+        r.getAs[Double]("score"))).toSeq
+    Seq[(String, Seq[(Int, Seq[Double])] => org.apache.spark.sql.DataFrame)](
+      "quantizedIvfKnn" -> (q => Ann.quantizedIvfKnn(spark, dir, queryVecs = q)),
+      "ivfPqKnn" -> (q => Ann.ivfPqKnn(spark, dir, queryVecs = q))
+    ).foreach { case (surface, request) =>
+      val batched = rows(request(Ann.querySet))
+      Ann.querySet.foreach { q =>
+        withClue(s"$surface query ${q._1}: ") {
+          rows(request(Seq(q))) shouldBe batched.filter(_._1 == q._1)
+        }
+      }
+    }
+  }
+
   private def dataFilesOf(dir: String): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
