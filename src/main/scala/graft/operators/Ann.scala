@@ -109,14 +109,28 @@ object Ann {
     * row per query probing its partition key `key` (IVF cell, LSH
     * bucket, RP-tree leaf), carrying that query's `payload`. `probes`
     * maps each probed key to its (query_id, payload) pairs and rides
-    * the plan as a literal (the c14 dictGet shape), read with
-    * `inline(element_at(map, key))`: no driver-side `LocalRelation` to
-    * broadcast, so no broadcast job. A key no query probes yields no
-    * row. */
+    * the plan as a literal (the c14 dictGet shape): no driver-side
+    * `LocalRelation` to broadcast, so no broadcast job. A key no query
+    * probes yields no row.
+    *
+    *  - Every key carries the same single pair (one query whose payload
+    *    does not depend on the key): the probe is the scan filtered to
+    *    the probed keys, with `query_id` and the payload as plain
+    *    literals. No map literal (nprobe copies of the query vector)
+    *    and no `Generate`.
+    *  - Otherwise (several queries, or a per-key payload such as PQ's
+    *    cell LUT): the map literal, read with
+    *    `inline(element_at(map, key))`. */
   private[operators] def probeRows[K: TypeTag, P: TypeTag](scan: DataFrame,
       key: Column, payload: String, probes: Map[K, Seq[(Int, P)]]): DataFrame =
-    scan.select(col("*"),
-      inline(element_at(typedlit(probes), key)).as(Seq("query_id", payload)))
+    probes.values.toSeq.distinct match {
+      case Seq(Seq((qid, p))) =>
+        scan.filter(key.isin(probes.keys.toSeq: _*))
+          .select(col("*"), lit(qid).as("query_id"), typedlit(p).as(payload))
+      case _ =>
+        scan.select(col("*"),
+          inline(element_at(typedlit(probes), key)).as(Seq("query_id", payload)))
+    }
 
   // ---------------------------------------------------------------- a1
 
@@ -487,7 +501,9 @@ object Ann {
 
   /** [[probeRows]] over a persisted layout partitioned by `key`: the
     * probed keys are a driver constant, so the `isin` lands in the
-    * scan's PartitionFilters and only probed directories are read. */
+    * scan's PartitionFilters and only probed directories are read (a
+    * literal single-query probe is that pruned scan plus two literal
+    * columns). */
   private[operators] def probeIndex[K: TypeTag, P: TypeTag](idx: DataFrame,
       key: String, payload: String, probes: Map[K, Seq[(Int, P)]]): DataFrame =
     probeRows(idx.filter(col(key).isin(probes.keys.toSeq: _*)),
@@ -513,7 +529,8 @@ object Ann {
     graft.sources.LocalIndex.path("ivf-index", d, "_k" + NumCentroids)
 
   /** a3's persisted twin of [[ensureLshIndex]]: the corpus written
-    * partitioned BY CELL ID under the trained codebook. The index
+    * partitioned BY CELL ID under the trained codebook, one file per
+    * cell ([[ensureCellIndex]]). The index
     * fingerprint includes the codebook values: the local k-means is
     * only per-JVM-deterministic (`avg` partial-sum order), so an index
     * written by a previous process against an ulp-different codebook
@@ -533,18 +550,31 @@ object Ann {
     // persisted beside the index and loaded, making the same check
     // process-independent; the rebuild-on-mismatch guard is what keeps
     // either cache honest.
-    graft.sources.LocalIndex.ensureIncremental("ivf-index", d,
-      "_k" + NumCentroids, Seq(s"$d/embeddings.parquet"),
-      extra = "cb:" + cb.hashCode) { path =>
-      Tables.embeddings(s, d)
-        .withColumn("cid", nearestCentroid(cb, col("embedding")))
-        .write.mode("overwrite").option("compression", "zstd")
+    ensureCellIndex(s, d, "ivf-index", "_k" + NumCentroids,
+        "cb:" + cb.hashCode) {
+      _.withColumn("cid", nearestCentroid(cb, col("embedding")))
+    }
+  }
+
+  /** The one writer of the cell-partitioned IVF layouts (float, int8,
+    * PQ) under [[graft.sources.LocalIndex.ensureIncremental]]: `rows`
+    * maps corpus rows to layout rows carrying `cid`; a build writes the
+    * whole corpus, an append only the new shard files. Both repartition
+    * on `cid` first, so each cell is one writer task: a build leaves
+    * one file per cell directory and an append adds at most one file
+    * per touched cell (the token index's `repartition(col("tb"))`
+    * rule), and a probed cell is one file open per layout. */
+  private def ensureCellIndex(s: SparkSession, d: String, kind: String,
+      suffix: String, extra: String)(rows: DataFrame => DataFrame): String = {
+    def write(corpus: DataFrame, mode: String, path: String): Unit =
+      rows(corpus).repartition(col("cid"))
+        .write.mode(mode).option("compression", "zstd")
         .partitionBy("cid").parquet(path)
+    graft.sources.LocalIndex.ensureIncremental(kind, d, suffix,
+      Seq(s"$d/embeddings.parquet"), extra) { path =>
+      write(Tables.embeddings(s, d), "overwrite", path)
     } { (newFiles, path) =>
-      s.read.parquet(newFiles: _*)
-        .withColumn("cid", nearestCentroid(cb, col("embedding")))
-        .write.mode("append").option("compression", "zstd")
-        .partitionBy("cid").parquet(path)
+      write(s.read.parquet(newFiles: _*), "append", path)
     }
   }
 
@@ -669,27 +699,18 @@ object Ann {
     * cells therefore scan ~4× fewer bytes than a3's float32 index —
     * IVF pruning × reduced precision compose: at 100 TB the probe
     * reads NProbe/NumCentroids of a quarter-width corpus. Same
-    * grow-only append / codebook-change-rebuild contract as the float
-    * index. */
+    * one-file-per-cell writer and grow-only append /
+    * codebook-change-rebuild contract as the float index. */
   def ensureIvfIndexI8(s: SparkSession, d: String): String = {
     vectors.register(s)
     val cb = codebookFor(s, d)
-    def rows(df: DataFrame): DataFrame = df
-      .withColumn("cid", nearestCentroid(cb, col("embedding")))
-      .select(col("vec_id"),
-        (array_max(transform(col("embedding"), x => abs(x))).cast("double")
-          / lit(127.0)).as("scale"),
-        vectors.int8Pack(col("embedding")).as("qemb"), col("cid"))
-    graft.sources.LocalIndex.ensureIncremental("ivf-i8-index", d,
-      "_k" + NumCentroids, Seq(s"$d/embeddings.parquet"),
-      extra = "cb:" + cb.hashCode) { path =>
-      rows(Tables.embeddings(s, d))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cid").parquet(path)
-    } { (newFiles, path) =>
-      rows(s.read.parquet(newFiles: _*))
-        .write.mode("append").option("compression", "zstd")
-        .partitionBy("cid").parquet(path)
+    ensureCellIndex(s, d, "ivf-i8-index", "_k" + NumCentroids,
+        "cb:" + cb.hashCode) {
+      _.withColumn("cid", nearestCentroid(cb, col("embedding")))
+        .select(col("vec_id"),
+          (array_max(transform(col("embedding"), x => abs(x))).cast("double")
+            / lit(127.0)).as("scale"),
+          vectors.int8Pack(col("embedding")).as("qemb"), col("cid"))
     }
   }
 
@@ -909,27 +930,18 @@ object Ann {
   /** vq4's persisted index: same cell partitioning as a3/vq3 (cid
     * assigned on the full-precision vector, same coarse codebook —
     * identical probe sets), rows store ONLY vec_id + the 8-byte
-    * residual code. Same grow-only append / codebook-change-rebuild
-    * contract as the float and int8 indexes. */
+    * residual code. Same one-file-per-cell writer and grow-only append
+    * / codebook-change-rebuild contract as the float and int8 indexes. */
   def ensureIvfPqIndex(s: SparkSession, d: String): String = {
     vectors.register(s)
     val cb = codebookFor(s, d)
     val sub = pqCodebookFor(s, d)
-    def rows(df: DataFrame): DataFrame = df
-      .withColumn("cid", nearestCentroid(cb, col("embedding")))
-      .withColumn("embedding", residualCol(cb, col("cid")))
-      .select(col("vec_id"), pqEncode(sub).as("code"), col("cid"))
-    graft.sources.LocalIndex.ensureIncremental("ivf-pq-index", d,
-      "_k" + NumCentroids + "m" + PqSubspaces,
-      Seq(s"$d/embeddings.parquet"),
-      extra = "cb:" + cb.hashCode + "#pq:" + sub.hashCode) { path =>
-      rows(Tables.embeddings(s, d))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cid").parquet(path)
-    } { (newFiles, path) =>
-      rows(s.read.parquet(newFiles: _*))
-        .write.mode("append").option("compression", "zstd")
-        .partitionBy("cid").parquet(path)
+    ensureCellIndex(s, d, "ivf-pq-index",
+        "_k" + NumCentroids + "m" + PqSubspaces,
+        "cb:" + cb.hashCode + "#pq:" + sub.hashCode) {
+      _.withColumn("cid", nearestCentroid(cb, col("embedding")))
+        .withColumn("embedding", residualCol(cb, col("cid")))
+        .select(col("vec_id"), pqEncode(sub).as("code"), col("cid"))
     }
   }
 

@@ -184,7 +184,8 @@ object Dedup {
     * surviving capped buckets ([[bucketedPairs]] — one posting
     * shuffle, no self-join), then Jaccard from the carried
     * set sizes. Pairs only materialise for docs that actually share a
-    * shingle. */
+    * shingle. Unordered: [[d2Query]] sorts its answer, and d6 feeds the
+    * pairs to [[dupClustersAuto]] without a sort. */
   def ngramJaccard(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val ex = docShingles(docs)
       .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
@@ -194,11 +195,10 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("common"),
         round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   def d2Query(s: SparkSession, d: String): DataFrame =
-    ngramJaccard(Tables.documents(s, d))
+    ngramJaccard(Tables.documents(s, d)).orderBy(col("doc_a"), col("doc_b"))
 
   // ---------------------------------------------------------------- d3
 

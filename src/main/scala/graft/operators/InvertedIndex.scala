@@ -456,18 +456,29 @@ object InvertedIndex {
     * every corpus token are one per-corpus-version entry
     * ([[termStats]], the term dictionary a real deployment keeps in
     * the index manifest), so a warm request derives its needle's
-    * idf/avgdl on the driver and starts only its scoring jobs. All
+    * idf/avgdl on the driver and starts only its scoring job. All
     * per-doc math is then codegen'd arithmetic over (tf, dl) with the
     * idf/avgdl as literals: no joins, one partial-aggregable
-    * groupBy(doc_id). Both engines compose the IEEE formula in the
-    * same operation order and round to 4 decimals; ln is the one libm
-    * call (the q52 log-fold precedent — the round absorbs sub-ulp
-    * divergence). */
+    * groupBy(doc_id). When the pruned bucket files fit one
+    * `spark.sql.files.maxPartitionBytes` split (sizes from the layout's
+    * in-memory file index, [[graft.sources.LayoutCatalog.partitionBytes]]),
+    * the scan is coalesced to one partition, so the aggregate, the
+    * doc_id sort and a caller's rank cut run in the scan's stage: one
+    * job, no exchange, no AQE re-plan. Larger inputs keep the
+    * partition-parallel scan and the doc_id exchange. Both engines
+    * compose the IEEE formula in the same operation order and round to
+    * 4 decimals; ln is the one libm call (the q52 log-fold precedent —
+    * the round absorbs sub-ulp divergence). */
   def bm25Indexed(s: SparkSession, d: String,
       needle: Seq[String] = Needle): DataFrame = {
     val idx = Tables.loadLayout(s, ensureIndex(s, d))
-    val pruned = idx.filter(col("tb").isin(needleBuckets(needle).map(Int.box): _*) &&
+    val buckets = needleBuckets(needle)
+    val dirs = buckets.map(b => s"tb=$b").toSet
+    val filtered = idx.filter(col("tb").isin(buckets.map(Int.box): _*) &&
       col("token").isin(needle: _*))
+    val oneSplit = graft.sources.LayoutCatalog.partitionBytes(idx)(dirs)
+      .exists(_ <= s.sessionState.conf.filesMaxPartitionBytes)
+    val pruned = if (oneSplit) filtered.coalesce(1) else filtered
     val (idf, avgdl) = statsFor(s, d, needle)
     val idfCol = element_at(typedlit(idf), col("token"))
     val termScore = idfCol * (col("tf").cast("double") * lit(K1 + 1.0)) /

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.sources.BaseRelation
 
 /** The serving catalog of persisted layouts: one entry per layout
@@ -97,6 +97,21 @@ object LayoutCatalog {
   private def keyOf(spark: SparkSession, dir: String): Option[Key] =
     generation(dir).map(g => Key(g, mtime(Paths.get(dir)),
       mtime(Paths.get(dir, "_SUCCESS")), readConfs(spark), spark))
+
+  /** Total bytes of the data files under `frame`'s file relation whose
+    * parent directory name passes `dir` (a partition directory such as
+    * `tb=3`), read from the relation's file index in memory: a catalog
+    * entry's index, or the one the frame's own read listed. Nothing is
+    * listed here. None for a frame over no file index. */
+  def partitionBytes(frame: DataFrame)(dir: String => Boolean): Option[Long] =
+    frame.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case r: HadoopFsRelation => r.location
+    }.collect {
+      case fi: PartitioningAwareFileIndex =>
+        fi.allFiles().filter(f => dir(f.getPath.getParent.getName)).map(_.getLen).sum
+    }
 
   /** A frame over stamped layout `dir` from its entry, resolving the
     * entry on a miss; None if `dir` has no stamp. A miss resolves under

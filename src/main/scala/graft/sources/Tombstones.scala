@@ -44,31 +44,31 @@ object Tombstones {
 
   def path(layoutDir: String): String = layoutDir + "/_tombstones"
 
-  /** Per-layout write monitors: the read-union-overwrite below is NOT
-    * atomic, so two concurrent registrations against the same layout
-    * could interleave and silently drop one set — the exact
-    * resurrection the union semantics exist to prevent. One JVM-level
-    * lock per canonical layout path serializes them (the semCodebooks
-    * ConcurrentHashMap discipline). Cross-PROCESS writers remain a
-    * single-writer contract, like every layout mutation here: the
-    * ensure/rebuild lifecycle already assumes one maintaining process
-    * per layout. */
-  private val writeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  /** The sidecar's key column and id set, by canonical layout dir,
+    * under the key they were read at: the layout's generation and the
+    * nanosecond mtime of the sidecar's `_SUCCESS`. [[write]] and
+    * [[compact]] publish a fresh generation of a stamped layout, so
+    * the set is read once per generation and a warm live serve lists
+    * no file. An unstamped layout is read from disk every time. */
+  private val sets = new java.util.concurrent.ConcurrentHashMap[String,
+    ((String, Long), (Option[String], Seq[Long]))]()
 
   /** Register `ids` as deleted (sidecar-only write): the incoming set
     * is UNIONED with any set already registered — the mutation contract
     * keeps both bounded, so the merge is a driver-side set union — and
-    * the merged set is persisted atomically-enough via overwrite.
-    * Serialized per layout via [[writeLocks]]. */
+    * the merged set is persisted atomically-enough via overwrite. The
+    * read-union-overwrite is not atomic, so it runs under the layout's
+    * [[LayoutCatalog.locked]]: two concurrent registrations in this JVM
+    * could otherwise interleave and silently drop one set — the exact
+    * resurrection the union semantics exist to prevent. Cross-PROCESS
+    * writers remain a single-writer contract, like every layout
+    * mutation here. A stamped layout gets a fresh generation after the
+    * sidecar changes. */
   def write(s: SparkSession, layoutDir: String, keyCol: String,
       ids: Seq[Long]): Unit = {
     import s.implicits._
-    val key = java.nio.file.Paths.get(layoutDir)
-      .toAbsolutePath.normalize.toString
-    writeLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val prior = read(s, layoutDir, keyCol)
-        .map(_.collect().map(_.getLong(0)).toSeq).getOrElse(Seq.empty)
+    LayoutCatalog.locked(layoutDir) {
+      val prior = deleted(s, layoutDir, keyCol).getOrElse(Seq.empty)
       // Idempotent re-delete fast path: if every incoming id is already
       // registered, the union IS the prior set — skip the rewrite (a
       // re-run of a delete gate re-registers the same pinned set every
@@ -78,38 +78,61 @@ object Tombstones {
       if (!(prior.nonEmpty && ids.forall(prior.toSet))) {
         (prior ++ ids).distinct.sorted.toDF(keyCol).coalesce(1)
           .write.mode("overwrite").parquet(path(layoutDir))
+        if (LayoutCatalog.generation(layoutDir).isDefined)
+          LayoutCatalog.stamp(layoutDir)
       }
     }
   }
 
-  /** The live deleted set, if any delete was ever registered.
+  /** The live deleted set as a driver-side frame (a `LocalRelation`),
+    * if any delete was ever registered: see [[deleted]]. */
+  def read(s: SparkSession, layoutDir: String, keyCol: String): Option[DataFrame] = {
+    import s.implicits._
+    deleted(s, layoutDir, keyCol).map(_.toDF(keyCol))
+  }
+
+  /** The registered deleted ids (distinct, sorted), if any delete was
+    * ever registered; read once per generation of a stamped layout
+    * ([[sets]]).
     *
     * Schema is supplied, not inferred: the sidecar is always exactly
     * the single BIGINT key column [[write]] persists, and the
     * footer-inference pass `s.read.parquet` would otherwise run is a
     * whole driver job. No `distinct()` either — [[write]] persists a
-    * distinct sorted set (and [[compact]] re-persists via write), so
-    * a per-read dedup exchange was pure overhead on every serve and
-    * every registration's prior-read. A delete gate reads the sidecar
-    * ~5× per run (pinned-set read, one prior-read per serving copy,
-    * the serve's anti-join), so both savings multiply.
+    * distinct sorted set (and [[compact]] re-persists via write).
     *
     * A supplied schema whose column the files lack reads as all-null
     * keys, and an anti-join against null keys hides nothing — deleted
-    * rows would come back. So the sidecar's own column is checked
-    * first, from one part-file footer on the driver (no Spark job),
-    * and a `keyCol` that is not it fails loudly. */
-  def read(s: SparkSession, layoutDir: String, keyCol: String): Option[DataFrame] = {
+    * rows would come back. So the set is read under the sidecar's own
+    * column, named by one part-file footer on the driver (no Spark
+    * job), and a `keyCol` that is not it fails loudly; the cached set
+    * then serves every later read of the generation. */
+  private def deleted(s: SparkSession, layoutDir: String,
+      keyCol: String): Option[Seq[Long]] = {
     val p = path(layoutDir)
-    if (new java.io.File(p, "_SUCCESS").exists()) {
-      val stored = storedKeyCol(s, p)
+    val success = java.nio.file.Paths.get(p, "_SUCCESS")
+    if (!java.nio.file.Files.exists(success)) None
+    else {
+      def load(): (Option[String], Seq[Long]) = {
+        val stored = storedKeyCol(s, p)
+        (stored, s.read.schema(org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField(stored.getOrElse(keyCol),
+              org.apache.spark.sql.types.LongType))))
+          .parquet(p).collect().map(_.getLong(0)).toSeq)
+      }
+      val (stored, ids) = LayoutCatalog.generation(layoutDir) match {
+        case None => load()
+        case Some(gen) =>
+          val key = (gen, java.nio.file.Files.getLastModifiedTime(success)
+            .to(java.util.concurrent.TimeUnit.NANOSECONDS))
+          val dir = LayoutCatalog.canonical(layoutDir)
+          Option(sets.get(dir)).collect { case (k, v) if k == key => v }
+            .getOrElse { val v = load(); sets.put(dir, (key, v)); v }
+      }
       require(stored.forall(_ == keyCol),
         s"tombstone sidecar $p is keyed by ${stored.get}, not $keyCol")
-      Some(s.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            keyCol, org.apache.spark.sql.types.LongType))))
-        .parquet(p))
-    } else None
+      Some(ids)
+    }
   }
 
   /** The key column [[write]] persisted in the sidecar, read from the
@@ -137,20 +160,22 @@ object Tombstones {
       .getOrElse(scan)
 
   /** Fold the deleted rows out of the layout physically: one
-    * partition-aligned rewrite; serve results are identical before and
+    * partition-aligned rewrite under the layout's lock
+    * ([[graft.streaming.Compaction.rewrite]] publishes the swapped
+    * directory's generation); serve results are identical before and
     * after (spec-pinned per layout). Sidecar and lifecycle marker are
     * carried through the swap — see the object scaladoc. */
   def compact(s: SparkSession, layoutDir: String, keyCol: String,
-      partitionCol: String): Unit =
-    read(s, layoutDir, keyCol).foreach { t =>
+      partitionCol: String): Unit = LayoutCatalog.locked(layoutDir) {
+    deleted(s, layoutDir, keyCol).foreach { ids =>
+      import s.implicits._
       val rows = s.read.parquet(layoutDir)
-        .join(broadcast(t), Seq(keyCol), "left_anti")
+        .join(broadcast(ids.toDF(keyCol)), Seq(keyCol), "left_anti")
       val marker = java.nio.file.Paths.get(layoutDir, "_GRAFT_SRC")
       val markerBytes =
         if (java.nio.file.Files.exists(marker))
           Some(java.nio.file.Files.readAllBytes(marker))
         else None
-      val ids = t.collect().map(_.getLong(0)).toSeq // bounded set
       graft.streaming.Compaction.rewrite(layoutDir) { tmp =>
         rows.repartition(col(partitionCol))
           .write.mode("overwrite").option("compression", "zstd")
@@ -160,4 +185,5 @@ object Tombstones {
           java.nio.file.Paths.get(tmp, "_GRAFT_SRC"), b))
       }
     }
+  }
 }

@@ -726,9 +726,13 @@ object EventStream {
         // lands one file in every bucket dir it holds postings for
         // (tasks × buckets small files PER BATCH, measured ≤8 files in
         // each of ~29 dirs per batch at sf0.1), and both the compaction
-        // tick and every serve pay the open cost
+        // tick and every serve pay the open cost. The explicit count
+        // (the session's shuffle partitions) keeps the writers parallel:
+        // a count-less repartition is one AQE coalesces, at micro-batch
+        // sizes into ONE task that writes every bucket file
         graft.operators.InvertedIndex.postings(batch.toDF())
-          .repartition(col("tb"))
+          .repartition(batch.sparkSession.sessionState.conf.numShufflePartitions,
+            col("tb"))
           .write.mode("append").option("compression", "zstd")
           .partitionBy("tb").parquet(indexDir)
         // background merge every N batches: per-batch part files fold
@@ -781,9 +785,11 @@ object EventStream {
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // same one-file-per-bucket-per-batch discipline as indexMaintain
+        // same one-file-per-bucket-per-batch discipline and writer
+        // count as indexMaintain
         graft.operators.InvertedIndex.posPostings(batch.toDF())
-          .repartition(col("tb"))
+          .repartition(batch.sparkSession.sessionState.conf.numShufflePartitions,
+            col("tb"))
           .write.mode("append").option("compression", "zstd")
           .partitionBy("tb").parquet(indexDir)
         if (compactEvery > 0 && (id + 1) % compactEvery == 0)

@@ -777,6 +777,41 @@ class PlanAuditSpec extends SparkSpec
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("BM25 under one split is one stage with no exchange; above it the doc_id exchange stays") {
+    // the pruned bucket files fit one maxPartitionBytes split at TinySf,
+    // so the scan is coalesced to one partition and the aggregate, the
+    // doc_id sort and the rank cut run in its stage; a split size below
+    // the pruned bytes keeps the partition-parallel plan. Same rows.
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Ann, InvertedIndex}
+    def ranked() = InvertedIndex.bm25Indexed(spark, SparkSpec.TinySf, InvertedIndex.Needle)
+      .orderBy(col("bm25").desc, col("doc_id")).limit(Ann.K)
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect { case e: Exchange => e }
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val one = ranked()
+      withClue(one.queryExecution.executedPlan.toString) {
+        exchanges(one) shouldBe empty
+        one.queryExecution.executedPlan.toString should include("Coalesce 1")
+      }
+      val rows = one.collect().toSeq
+      rows should not be empty
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+      val split = ranked()
+      withClue(split.queryExecution.executedPlan.toString) {
+        exchanges(split) should not be empty
+      }
+      split.collect().toSeq shouldBe rows
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prev)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
+    }
+  }
+
   test("c15 TTL serve path is a scan of the surviving partitions only") {
     // the gate query must READ the post-expiry layout — one parquet
     // scan, no write job in the serve plan, no join

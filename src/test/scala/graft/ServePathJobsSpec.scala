@@ -93,6 +93,11 @@ class ServePathJobsSpec extends SparkSpec {
       info(s"$surface: ${jobs.size} jobs")
       withClue(s"$surface:\n" + jobs.mkString("\n---\n")) {
         jobs.size should be <= budget
+        // one query probes with a pruned scan and literal columns
+        if (surface != "ivfPqKnn") {
+          jobs.head should include("Scan parquet")
+          jobs.head should not include "Generate"
+        }
       }
     }
   }
@@ -124,10 +129,10 @@ class ServePathJobsSpec extends SparkSpec {
     withClue(jobs.mkString("\n---\n")) { jobs.size should be <= 4 }
   }
 
-  test("a fresh BM25 needle: at most 2 jobs, none in the builder") {
+  test("a fresh BM25 needle: one job, none in the builder") {
     // the corpus' term statistics are built by the first request, so a
-    // needle never served before derives its idf on the driver and
-    // starts only its scoring jobs
+    // needle never served before derives its idf on the driver; its
+    // pruned postings fit one split, so scoring is one job
     bm25(InvertedIndex.Needle).collect() // first request: index and statistics
     val tag = java.util.UUID.randomUUID.toString.filter(_.isLetter)
     Seq(Seq("table", "zz" + tag), Seq("stream", "value", "zy" + tag)).foreach { n =>
@@ -136,7 +141,7 @@ class ServePathJobsSpec extends SparkSpec {
       val jobs = buildJobs ++ jobsOf(ranked.collect(): Unit)
       withClue(s"$n:\n" + jobs.mkString("\n---\n")) {
         buildJobs shouldBe empty
-        jobs.size should be <= 2
+        jobs.size should be <= 1
         jobs.filter(_.contains("documents.parquet")) shouldBe empty
       }
     }

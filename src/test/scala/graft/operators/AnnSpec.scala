@@ -260,9 +260,6 @@ class AnnSpec extends SparkSpec {
     }
   }
 
-  /** Recursive (path → (length, mtime)) snapshot of the DATA files of
-    * an index dir (markers/_SUCCESS excluded — they legitimately
-    * update on append). */
   test("a single-query vq3/vq4 request answers exactly its rows of the batched request") {
     // nq = 1 refines over an InSet of collected candidates, nq > 1 over
     // the broadcast join: the two plans must agree row for row
@@ -285,6 +282,70 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("a single-query float IVF, LSH or RP-tree probe answers exactly its rows of the 5-query request") {
+    // one query plans the literal probe (pruned scan + literal query_id
+    // and vector), five the per-key map literal: same rows either way
+    vectors.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft-probe-nq1-").toString
+    corpus(400).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Int]("query_id"), r.getAs[Long]("vec_id"),
+        r.getAs[Double]("score"))).toSeq
+    Seq[(String, Seq[(Int, Seq[Double])] => org.apache.spark.sql.DataFrame)](
+      "indexedIvfKnn" -> (q => Ann.indexedIvfKnn(spark, dir, queryVecs = q)),
+      "indexedLshKnn" -> (q => Ann.indexedLshKnn(spark, dir, queryVecs = q)),
+      "RpTree.indexedQuery" -> (q => RpTree.indexedQuery(spark, dir, queryVecs = q))
+    ).foreach { case (surface, request) =>
+      val batched = rows(request(Ann.querySet))
+      batched.map(_._1).distinct.size shouldBe Ann.NumQueries
+      Ann.querySet.foreach { q =>
+        val one = request(Seq(q))
+        withClue(s"$surface query ${q._1}:\n${one.queryExecution.executedPlan}") {
+          one.queryExecution.executedPlan.toString should not include "Generate"
+          rows(one) shouldBe batched.filter(_._1 == q._1)
+        }
+      }
+    }
+  }
+
+  test("IVF layouts hold one data file per cell; an append adds at most one per touched cell") {
+    vectors.register(spark)
+    implicit val s = spark
+    val full = corpus(400)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-cells-").toString
+    full.filter(col("vec_id") < 300)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def ensureAll(): Seq[String] = Seq(Ann.ensureIvfIndex(spark, dir),
+      Ann.ensureIvfIndexI8(spark, dir), Ann.ensureIvfPqIndex(spark, dir))
+    /** cid= dir name → its data file paths. */
+    def cellFiles(idx: String): Map[String, Set[String]] =
+      new java.io.File(idx).listFiles().toSeq
+        .filter(f => f.isDirectory && f.getName.startsWith("cid="))
+        .map(c => c.getName -> c.listFiles().toSeq
+          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+          .map(_.getName).toSet)
+        .toMap
+    val built = ensureAll().map(cellFiles)
+    built.foreach { cells =>
+      cells should not be empty
+      all(cells.values.map(_.size)) shouldBe 1
+    }
+    full.filter(col("vec_id") >= 300)
+      .write.mode("append").parquet(s"$dir/embeddings.parquet")
+    ensureAll().map(cellFiles).zip(built).foreach { case (after, before) =>
+      after.keySet should contain allElementsOf before.keySet
+      after.foreach { case (cell, files) =>
+        val old = before.getOrElse(cell, Set.empty[String])
+        old.subsetOf(files) shouldBe true
+        (files -- old).size should be <= 1
+      }
+      after.values.map(_.size).sum should be > before.values.map(_.size).sum
+    }
+  }
+
+  /** Recursive (path → (length, mtime)) snapshot of the DATA files of
+    * an index dir (markers/_SUCCESS excluded — they legitimately
+    * update on append). */
   private def dataFilesOf(dir: String): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)

@@ -110,6 +110,36 @@ class LayoutCatalogSpec extends graft.SparkSpec {
       ((0L until 20L).map(i => (i, None)) ++ (20L until 25L).map(i => (i, Some(1.5))))
   }
 
+  test("a delete registered after an entry is retained is honoured by the next read") {
+    graft.functions.vectors.register(spark)
+    val embs = Files.createTempDirectory("catalog-live").toString
+    (0 until 400).map { i =>
+      val base = VectorSearch.qvec(10 + i % Ann.NumQueries)
+      (i.toLong, base.zipWithIndex.map { case (x, j) =>
+        (x + (i / Ann.NumQueries) * 0.01 * ((j % 3) - 1)).toFloat })
+    }.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$embs/embeddings.parquet")
+    def live(): Seq[Long] = Ann.quantizedIvfKnn(spark, embs, live = true)
+      .collect().map(_.getLong(1)).toSeq
+    val base = live()
+    val i8Dir = Ann.ensureIvfIndexI8(spark, embs)
+    val gen = LayoutCatalog.generation(i8Dir)
+    Ann.tombstoneVecsAll(spark, embs, base.take(2))
+    LayoutCatalog.generation(i8Dir) should not be gen
+    val first = live()
+    first should contain noneOf (base(0), base(1))
+    // warm: the layout entry and the sidecar's id set are both retained
+    val files = org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+    val before = files.getCount
+    live() shouldBe first
+    files.getCount - before shouldBe 0
+    // a second registration under the retained entries is honoured too
+    Ann.tombstoneVecsAll(spark, embs, first.take(1))
+    val second = live()
+    second should contain noneOf (base(0), base(1), first.head)
+    Tombstones.read(spark, i8Dir, "vec_id").get.collect().map(_.getLong(0)).toSet shouldBe
+      Set(base(0), base(1), first.head)
+  }
+
   test("tombstone compaction under a retained entry: t8c and a3_delete_ann answer as before") {
     // t8c: the posting layout
     val docs = Files.createTempDirectory("catalog-t8c").toString
