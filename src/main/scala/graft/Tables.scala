@@ -16,7 +16,7 @@ object Tables {
     * and every query pays it once per input table (measured r22: 135
     * such jobs, ~4 s of stage wall, in ONE timed pass over the query
     * surface at sf0.1). Keyed on the absolute path, the table's
-    * data-file manifest ([[graft.sources.LocalIndex.dataManifest]]:
+    * data-file manifest ([[graft.sources.DataManifest.of]]:
     * path, length and mtime of every data file) and the session's
     * schema-inference confs, so a part file replaced in place re-infers
     * whatever the directory's own mtime says, and a session that reads
@@ -35,7 +35,7 @@ object Tables {
     val f = localFile(p)
     if (f.exists) {
       val key = (f.getAbsolutePath,
-        graft.sources.LocalIndex.dataManifest(Seq(f.getPath)),
+        graft.sources.DataManifest.of(Seq(f.getPath)),
         graft.sources.LayoutCatalog.readConfs(spark))
       val sch = schemaMemo.computeIfAbsent(key,
         _ => spark.read.parquet(p).schema)

@@ -409,65 +409,27 @@ object Ann {
     cents
   }
 
+  private val codebooks =
+    new graft.sources.CorpusMemo[Seq[(Long, Seq[Double])]]("embeddings", growOnly = true)
+
   /** Trained codebook per corpus dir — train once, query many (the
-    * reference's index usage). Mutable on purpose: [[oracles]] embeds
-    * the trained centroid VALUES of the last-trained corpus as SQL
-    * literals (Verify dumps oracle_sql.json AFTER running the queries,
-    * so the cache is populated by dump time); re-deriving float
-    * k-means bit-exactly inside DuckDB SQL would be parity-fragile —
-    * `avg` summation order differs across engines. */
-  private val codebooks = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], Seq[(Long, Seq[Double])])]()
-
-  /** Cache key = dir + source-file fingerprint, for trained state
-    * whose lifecycle is rebuild-on-ANY-change (a4's tree, t9's index
-    * stats): a corpus REGENERATED in place (same dir, new bytes) must
-    * retrain, not serve the old corpus' constants — dir-only keying
-    * would in a long-lived JVM. The fingerprint read is file
-    * metadata, the a2-ensure discipline. */
-  private[operators] def trainedKey(d: String, table: String): String =
-    d + "#" + graft.sources.LocalIndex.fingerprint(Seq(s"$d/$table.parquet"))
-
-  /** The IVF codebook's lifecycle is DIFFERENT from [[trainedKey]]'s
-    * rebuild-on-any-change: the incremental index contract requires
-    * the codebook to stay FIXED while the corpus only GROWS (a
-    * retrained codebook moves centroids and silently invalidates
-    * every already-persisted cell assignment — the documented
-    * LSM-style drift trade, folded back at full rebuild). So: serve
-    * the cached codebook while every file it was trained on is still
-    * byte-identical on disk (grow-only or unchanged); retrain only on
-    * mutation/removal — the same manifest rule
-    * [[graft.sources.LocalIndex.ensureIncremental]] applies to the
-    * index files themselves, so codebook and index lifecycles agree. */
-  def codebookFor(s: SparkSession, d: String): Seq[(Long, Seq[Double])] = {
-    // get/recompute/put, NOT compute(): Lloyd training is a multi-job
-    // Spark workload, and running it inside the ConcurrentHashMap bin
-    // lock would hold the bin for the whole job (and a reentrant call
-    // for the same dir would throw a recursive-update exception) —
-    // the Dpp.peakThreshold shape; a duplicate recompute on a race is
-    // cheaper than a long-held lock.
-    val now = graft.sources.LocalIndex.dataManifest(
-      Seq(s"$d/embeddings.parquet"))
-    val cur = codebooks.get(d)
-    if (cur != null && cur._1.nonEmpty && cur._1.forall(now.contains)) {
-      // grow-only serve — but ADOPT the current manifest: a shard
-      // appended after training is part of the served corpus from
-      // here on, so a later in-place mutation of it must read as a
-      // mutation (retrain), not as an invisible non-member of the
-      // train-time file set. CAS-replace against the OBSERVED entry:
-      // a plain put here could stomp a concurrent mutation-triggered
-      // retrain with this thread's pre-mutation codebook (the adopt
-      // loses the race, which is the safe direction — next call
-      // re-reads whatever won)
-      if (cur._1 != now) codebooks.replace(d, cur, (now, cur._2))
-      cur._2
-    } else {
+    * reference's index usage). [[oracles]] embeds the trained centroid
+    * VALUES as SQL literals through `peek` (Verify dumps
+    * oracle_sql.json AFTER running the queries, so the memo is
+    * populated by dump time); re-deriving float k-means bit-exactly
+    * inside DuckDB SQL would be parity-fragile — `avg` summation order
+    * differs across engines. Grow-only: the persisted cell layouts are
+    * only valid under the codebook that wrote them, so it stays FIXED
+    * while the corpus only grows (the documented LSM-style drift
+    * trade, folded back at full rebuild) and retrains on a rewritten
+    * or removed shard — the rule [[graft.sources.LocalIndex]] applies
+    * to the layouts themselves, so codebook and layout lifecycles
+    * agree. */
+  def codebookFor(s: SparkSession, d: String): Seq[(Long, Seq[Double])] =
+    codebooks(d) {
       val embs = Tables.embeddings(s, d)
-      val trained = trainCodebook(embs, seedCodebook(embs))
-      codebooks.put(d, (now, trained))
-      trained
+      trainCodebook(embs, seedCodebook(embs))
     }
-  }
 
   /** a3: IVF coarse quantization over a trained codebook. Only the
     * bounded codebook is driver-side; it enters the plan as k literal
@@ -530,8 +492,8 @@ object Ann {
 
   /** a3's persisted twin of [[ensureLshIndex]]: the corpus written
     * partitioned BY CELL ID under the trained codebook, one file per
-    * cell ([[ensureCellIndex]]). The index
-    * fingerprint includes the codebook values: the local k-means is
+    * cell ([[ensureCellIndex]]). The index's
+    * `extra` carries the codebook values: the local k-means is
     * only per-JVM-deterministic (`avg` partial-sum order), so an index
     * written by a previous process against an ulp-different codebook
     * is rebuilt rather than probed inconsistently. (At 100 TB the
@@ -643,11 +605,6 @@ object Ann {
   def compactVecTombstones(s: SparkSession, d: String): Unit =
     graft.sources.Tombstones.compact(s, ensureIvfIndex(s, d), "vec_id", "cid")
 
-  /** a3_delete_ann gate: delete the pinned vec set (the [[DeleteN]]
-    * smallest-hash60 vec_ids among a3_indexed's own hits — k-bounded
-    * driver derivation, the c20 forget-set discipline), then serve the
-    * delete-honoring probe. The oracle re-ranks the probed candidates
-    * minus the same pinned set, so refilled ranks are checked too. */
   /** The delete gates' pinned forget set (the c20 forget-set
     * discipline: the [[DeleteN]] smallest-hash60 vec_ids among
     * a3_indexed's own hits — k-bounded driver derivation).
@@ -672,6 +629,11 @@ object Ann {
           .collect().map(_.getLong(0)).toSeq
       }
 
+  /** a3_delete_ann gate: delete the pinned vec set (the [[DeleteN]]
+    * smallest-hash60 vec_ids among a3_indexed's own hits — k-bounded
+    * driver derivation, the c20 forget-set discipline), then serve the
+    * delete-honoring probe. The oracle re-ranks the probed candidates
+    * minus the same pinned set, so refilled ranks are checked too. */
   def a3DeleteQuery(s: SparkSession, d: String): DataFrame = {
     val del = pinnedDeleteSet(s, d)
     tombstoneVecsAll(s, d, del) // every serving copy gets the delete
@@ -878,45 +840,27 @@ object Ann {
       .sortBy(_._1).map(_._2).zipWithIndex
       .map { case (v, j) => (j.toLong, v) }.toSeq
 
-  private val pqBooks = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], Seq[Seq[(Long, Seq[Double])]])]()
+  private val pqBooks =
+    new graft.sources.CorpusMemo[Seq[Seq[(Long, Seq[Double])]]]("embeddings", growOnly = true)
 
   /** Trained per-subspace PQ codebooks — [[trainCodebook]] run on each
     * sliced subspace (one bounded Lloyd refinement per subspace, k×dim
-    * driver doubles of state), with [[codebookFor]]'s
-    * fixed-while-grow-only lifecycle: the persisted codes are only
-    * valid under the codebooks that wrote them, so grow-only corpora
-    * serve the cached books and mutation retrains (+ the index
-    * `extra` fingerprint forces the rebuild). */
-  def pqCodebookFor(s: SparkSession, d: String): Seq[Seq[(Long, Seq[Double])]] = {
-    // get/recompute/put outside the map lock (the codebookFor /
-    // Dpp.peakThreshold shape): the 16-subspace Lloyd training is a
-    // long multi-job Spark workload that must not run inside a
-    // ConcurrentHashMap bin lock — and it CALLS codebookFor, so a
-    // compute()-held bin could deadlock-by-reentrancy.
-    val now = graft.sources.LocalIndex.dataManifest(
-      Seq(s"$d/embeddings.parquet"))
-    val cur = pqBooks.get(d)
-    if (cur != null && cur._1.nonEmpty && cur._1.forall(now.contains)) {
-      // CAS adopt (codebookFor's rule): never overwrite a concurrent
-      // mutation-triggered retrain with the stale observed books
-      if (cur._1 != now) pqBooks.replace(d, cur, (now, cur._2))
-      cur._2
-    } else {
+    * driver doubles of state). Grow-only like [[codebookFor]]: the
+    * persisted codes are only valid under the books that wrote them
+    * (a retrain changes the index `extra`, which forces the rebuild). */
+  def pqCodebookFor(s: SparkSession, d: String): Seq[Seq[(Long, Seq[Double])]] =
+    pqBooks(d) {
       val cb = codebookFor(s, d)
       val res = Tables.embeddings(s, d)
         .withColumn("cid", nearestCentroid(cb, col("embedding")))
         .withColumn("embedding", residualCol(cb, col("cid")))
         .select(col("vec_id"), col("embedding"))
-      val trained = (0 until PqSubspaces).map { m =>
+      (0 until PqSubspaces).map { m =>
         trainCodebook(
           res.select(col("vec_id"), subspaceCol(m).as("embedding")),
           seedSubCodebook(res, m))
       }
-      pqBooks.put(d, (now, trained))
-      trained
     }
-  }
 
   /** The 16-nibble PQ code as a codegen'd column: one bounded
     * [[nearestCentroid]] argmin fold per subspace over the corpus
@@ -1048,7 +992,7 @@ object Ann {
     * untrained seed, derived in SQL exactly as [[seedCodebook]]
     * derives it. */
   private def centsSql(d: String): String = {
-    val cb = Option(codebooks.get(d)).map(_._2).getOrElse(Nil)
+    val cb = codebooks.peek(d).getOrElse(Nil)
     if (cb.nonEmpty)
       "cents(ccid, cv) AS (VALUES " + sqlValues(cb.map { case (cid, cv) =>
         s"($cid, ${VectorSearch.sqlArray(cv)}::DOUBLE[])" }) + ")"
@@ -1136,7 +1080,7 @@ object Ann {
     * compare — the a4-tree discipline). */
   private def vq4Sql(d: String): String = {
     val sub: Seq[Seq[(Long, Seq[Double])]] =
-      Option(pqBooks.get(d)).map(_._2).getOrElse(
+      pqBooks.peek(d).getOrElse(
         (0 until PqSubspaces).map(_ =>
           (0 until PqKsub).map(j =>
             (j.toLong, Seq.fill(PqSubDim)(0.0)): (Long, Seq[Double])).toSeq))
@@ -1158,7 +1102,7 @@ object Ann {
     // driver-side probe selects get a row — the SQL-computed qprobe
     // must agree (the shared-argmin parity assumption; a divergence
     // drops the inner join and fails the gate loudly)
-    val cb = Option(codebooks.get(d)).map(_._2).getOrElse(Nil)
+    val cb = codebooks.peek(d).getOrElse(Nil)
     val lutRows = cellProbes(cb, querySet, NProbe)(pqResidualLut(cb, sub))
       .toSeq.flatMap { case (cid, qs) => qs.map { case (i, lut) => (i, cid, lut) } }
       .sortBy { case (i, cid, _) => (i, cid) }

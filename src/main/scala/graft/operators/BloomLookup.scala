@@ -64,7 +64,7 @@ object BloomLookup {
   /** Rewrite events with a user_id bloom filter per row group. */
   def ensureLayout(s: SparkSession, d: String): String =
     graft.sources.LocalIndex.ensure("bloom-events", d, "_u",
-      graft.sources.LocalIndex.fingerprint(Seq(s"$d/events.parquet"))) { path =>
+      Seq(s"$d/events.parquet"), "") { path =>
       Tables.events(s, d)
         .write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#user_id", "true")

@@ -249,9 +249,8 @@ object Curation {
     * layout. */
   def c7Query(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val fp = graft.sources.LocalIndex.fingerprint(Seq(s"$d/documents.parquet")) +
-      s"_b$RowsPerBucket"
-    val dir = graft.sources.LocalIndex.ensure("compact", d, "", fp)(
+    val dir = graft.sources.LocalIndex.ensure("compact", d, "",
+        Seq(s"$d/documents.parquet"), s"b$RowsPerBucket")(
       out => { partitionedLayout(docs, out); () })
     layoutStats(docs, Tables.loadLayout(s, dir))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{textops, vectors}
+import graft.sources.{CorpusMemo, DataManifest}
 
 /** Training-data deduplication (SURVEY §2, d1–d10).
   *
@@ -813,14 +814,15 @@ object Dedup {
     val table = "graft_postings_" +
       d.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase +
       f"_${d.hashCode & 0xffffffffL}%08x" + s"_b$buckets"
-    val now = graft.sources.LocalIndex.dataManifest(Seq(s"$d/documents.parquet"))
+    val now = DataManifest.of(Seq(s"$d/documents.parquet"))
     val marker = now.mkString("|")
     val stored =
       if (s.catalog.tableExists(table))
         s.sql(s"SHOW TBLPROPERTIES $table").collect()
           .find(_.getString(0) == "graft.src").map(_.getString(1))
       else None
-    val storedEntries = stored.map(_.split('|').toSeq.filter(_.nonEmpty))
+    val delta = stored.fold[DataManifest.Delta](DataManifest.Changed)(m =>
+      DataManifest.compare(m.split('|').toSeq.filter(_.nonEmpty), now))
 
     // (g, doc_id, n) postings of a doc batch, hot cap applied within
     // it. `cap` is PRO-RATED to the batch's share of the indexed
@@ -849,13 +851,10 @@ object Dedup {
         .find(_.getString(0) == "graft.ndocs")
         .map(_.getString(1).toLong)
 
-    storedEntries match {
-      case Some(old) if old == now => // fresh: serve as-is
-      case Some(old) if old.nonEmpty && old.forall(now.contains) =>
-        // grow-only corpus: append just the new shard files' postings
-        val newFiles = now.filterNot(old.contains)
-          // strip trailing :len:mtime (the path itself may hold ':')
-          .map(e => e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1)))
+    delta match {
+      case DataManifest.Fresh => // serve as-is
+      case DataManifest.Grew(newFiles) =>
+        // grow-only corpus: append just the new shard files' postings.
         // repartition on the bucket key first: bucketed writers emit
         // one file per (task × bucket), so a 32-task shard append
         // would land ~task×bucket footer-dominated files — aligned,
@@ -878,7 +877,7 @@ object Dedup {
         if (graft.streaming.Compaction.partFiles(tableLocation(s, table))
             > compactAt)
           compactPostingTable(s, table, buckets)
-      case _ =>
+      case DataManifest.Changed =>
         // full (re)build; clear any catalog-orphaned warehouse files
         // (the in-memory catalog forgets tables on JVM exit; the files
         // remain)
@@ -922,7 +921,7 @@ object Dedup {
     * copy is the amortized price — paid once per `compactAt` appends,
     * not per batch. Crash-safe the same way the fresh build is: a
     * crash mid-rewrite leaves a droppable catalog entry whose next
-    * ensure rebuilds from the corpus (the fingerprint no longer
+    * ensure rebuilds from the corpus (the manifest no longer
     * matches a half-written table's properties). */
   def compactPostingTable(s: SparkSession, table: String, buckets: Int): Unit = {
     import org.apache.spark.sql.functions.col
@@ -1057,22 +1056,17 @@ object Dedup {
       .sortBy(_._1).toSeq
   }
 
+  private val semCodebooks =
+    new CorpusMemo[SemCells.Assigner]("embeddings", growOnly = false)
+
   /** Trained d9 assigner per corpus dir — flat codebook below
     * [[SemMaxK]] cells (the historical path, same literal-embedding
     * oracle contract as a3's codebook, [[Ann.codebookFor]]), TWO-LEVEL
-    * coarse→fine past it ([[SemCells]]). Lifecycle is
-    * rebuild-on-any-change ([[Ann.trainedKey]]) because d9 is a batch
-    * operator with no persisted-index append contract. get/recompute/
-    * put OUTSIDE the map lock — Lloyd training is a multi-job Spark
-    * workload (the Dpp.peakThreshold shape). */
-  private val semCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, SemCells.Assigner)]()
-
-  def semAssignerFor(s: SparkSession, d: String): SemCells.Assigner = {
-    val key = Ann.trainedKey(d, "embeddings")
-    val cached = semCodebooks.get(d)
-    if (cached != null && cached._1 == key) cached._2
-    else {
+    * coarse→fine past it ([[SemCells]]). Rebuild-on-change: d9 is a
+    * batch operator with no persisted layout, so any corpus change
+    * retrains (fresh k ∝ n is the right batch behavior). */
+  def semAssignerFor(s: SparkSession, d: String): SemCells.Assigner =
+    semCodebooks(d) {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       // n from parquet footers (the d5 guard's discipline) — the
       // retrain path needs the corpus size only for k and the
@@ -1087,17 +1081,14 @@ object Dedup {
           f"${n.toDouble / semKTotal(n)}%.0f > bucket cap $MaxNearDupBucket " +
           "even at the two-level SemMaxK² ceiling — every cell would be " +
           "dropped by the occupancy guard. Three-level territory.")
-      val asg = SemCells.train(e, n, semKTotal(n).toInt, SemMaxK, semSeed)
-      semCodebooks.put(d, (key, asg))
-      asg
+      SemCells.train(e, n, semKTotal(n).toInt, SemMaxK, semSeed)
     }
-  }
 
   /** Flat-codebook view of the d9 cache for the oracle (gate corpora
     * are single-level; a two-level assigner cannot be replayed as SQL
     * literals and surfaces the loud sentinel instead). */
   private def semFlatCents(d: String): Seq[(Long, Seq[Double])] =
-    Option(semCodebooks.get(d)).map(_._2).collect {
+    semCodebooks.peek(d).collect {
       case SemCells.Flat(c) => c }.getOrElse(Nil)
 
   /** d9: SemDeDup — semantic dedup scoped to trained k-means clusters,
@@ -1163,26 +1154,19 @@ object Dedup {
     embs.filter(col("vec_id") % 11 === 0)
       .select((col("vec_id") + lit(8000000L)).as("vec_id"), col("embedding"))
 
-  /** The d10 codebook cache — same training as [[semCodebookFor]] but
-    * the GROW-ONLY lifecycle of [[Ann.codebookFor]]: an incremental
+  private val semIndexCodebooks =
+    new CorpusMemo[SemCells.Assigner]("embeddings", growOnly = true)
+
+  /** The d10 assigner — same training as [[semAssignerFor]] but
+    * grow-only like [[Ann.codebookFor]]: the persisted kept-vector
     * index must keep its codebook FIXED while the corpus only gains
     * files (a retrained codebook moves cells and silently invalidates
     * every persisted assignment — the documented LSM drift trade,
-    * folded back at full rebuild). Separate cache from d9's on
-    * purpose: the batch operator retrains per corpus state (fresh
-    * k ∝ n is the right batch behavior), the index must not. */
-  private val semIndexCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], SemCells.Assigner)]()
-
-  def semIndexAssignerFor(s: SparkSession, d: String): SemCells.Assigner = {
-    val now = graft.sources.LocalIndex.dataManifest(Seq(s"$d/embeddings.parquet"))
-    val cur = semIndexCodebooks.get(d)
-    if (cur != null && cur._1.nonEmpty && cur._1.forall(now.contains)) {
-      // CAS adopt (Ann.codebookFor's rule): a stale adopt must never
-      // overwrite a concurrent mutation-triggered retrain
-      if (cur._1 != now) semIndexCodebooks.replace(d, cur, (now, cur._2))
-      cur._2
-    } else {
+    * folded back at full rebuild); a rewritten or removed shard
+    * retrains. Separate memo from d9's on purpose: the batch operator
+    * retrains per corpus state, the index must not. */
+  def semIndexAssignerFor(s: SparkSession, d: String): SemCells.Assigner =
+    semIndexCodebooks(d) {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       // n from parquet footers (the d5 guard's discipline) — the
       // retrain path needs the corpus size only for k and the
@@ -1194,14 +1178,11 @@ object Dedup {
           s"exceeds the $MaxNearDupBucket-occupancy design point at build " +
           "time even at the two-level SemMaxK² ceiling — three-level " +
           "territory.")
-      val trained = SemCells.train(e, n, semIndexKTotal(n).toInt, SemMaxK, semSeed)
-      semIndexCodebooks.put(d, (now, trained))
-      trained
+      SemCells.train(e, n, semIndexKTotal(n).toInt, SemMaxK, semSeed)
     }
-  }
 
   private def semIndexFlatCents(d: String): Seq[(Long, Seq[Double])] =
-    Option(semIndexCodebooks.get(d)).map(_._2).collect {
+    semIndexCodebooks.peek(d).collect {
       case SemCells.Flat(c) => c }.getOrElse(Nil)
 
   /** The persisted kept-vector index of a corpus dir: embeddings

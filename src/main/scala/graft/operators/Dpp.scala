@@ -42,7 +42,7 @@ object Dpp {
     * layout carrying the whole row, so any report can serve off it). */
   def ensureLayout(s: SparkSession, d: String): String =
     graft.sources.LocalIndex.ensure("day-events", d, "_full",
-      graft.sources.LocalIndex.fingerprint(Seq(s"$d/events.parquet"))) { path =>
+      Seq(s"$d/events.parquet"), "") { path =>
       Tables.events(s, d)
         .withColumn("day", date_trunc("day", col("ts")).cast("date"))
         .repartition(col("day"))
@@ -54,8 +54,7 @@ object Dpp {
     * (day-domain-sized aggregate, one scan): the previous `.cache()`
     * matched by canonicalized plan/path and would keep serving stale
     * counts after an in-place corpus regeneration while
-    * [[ensureLayout]] correctly rebuilt — the same staleness class the
-    * round-13 Ann/RpTree/bm25 fingerprint keys closed. The dim must
+    * [[ensureLayout]] correctly rebuilt. The dim must
     * stay a Spark aggregate-with-filter over the scan (NOT a
     * driver-collected LocalRelation): the selective predicate on it is
     * what makes Catalyst's PartitionPruning rule insert the
@@ -65,30 +64,16 @@ object Dpp {
       .select(date_trunc("day", col("ts")).cast("date").as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_day"))
 
+  private val thresholds =
+    new graft.sources.CorpusMemo[Long]("events", growOnly = false)
+
   /** Peak-day threshold: FLOOR of mean events per day — exact integer
     * division of two exact counts, so the oracle derives the same
     * number independently (no literal handoff needed). A driver
-    * LITERAL (one bounded 2-long aggregate), cached keyed by the
-    * source fingerprint so in-place regeneration retrains instead of
-    * serving the stale scalar. */
-  private val thresholdCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Long)]()
-
-  def peakThreshold(s: SparkSession, d: String): Long = {
-    val fp = graft.sources.LocalIndex.fingerprint(Seq(s"$d/events.parquet"))
-    // keyed by dir with the fingerprint in the VALUE (the
-    // InvertedIndex.termStats shape): regeneration REPLACES the entry
-    // instead of accreting one per historical fingerprint, so a
-    // long-lived session that regenerates in place holds exactly one
-    // threshold per dir.
-    // The Spark job runs OUTSIDE any map lock — a collect inside
-    // compute() would hold the bin for the whole job (and a reentrant
-    // call for the same dir would throw a recursive-update
-    // IllegalStateException); the occasional duplicate recompute on a
-    // race is cheaper than a long-held lock.
-    val cur = thresholdCache.get(d)
-    if (cur != null && cur._1 == fp) cur._2
-    else {
+    * LITERAL (one bounded 2-long aggregate), memoized per corpus dir,
+    * rebuild-on-change: a regenerated or grown corpus recomputes it. */
+  def peakThreshold(s: SparkSession, d: String): Long =
+    thresholds(d) {
       val r = dayCounts(s, d)
         .agg(sum(col("n_day")).as("n"), count(lit(1)).as("nd"))
         .collect().head
@@ -96,11 +81,8 @@ object Dpp {
       // the c15/Ttl listing-contract lesson (silent degenerate inputs
       // must not produce quiet nonsense)
       require(r.getLong(1) > 0, s"peakThreshold: no event days under $d")
-      val trained = (fp, r.getLong(0) / r.getLong(1))
-      thresholdCache.put(d, trained)
-      trained._2
+      r.getLong(0) / r.getLong(1)
     }
-  }
 
   /** The peak-days report, served from the partitioned layout with
     * DPP pruning the fact scan to qualifying day directories. */

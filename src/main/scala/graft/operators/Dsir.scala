@@ -140,14 +140,13 @@ object Dsir {
     * once per corpus state, score every arriving shard against the
     * frozen (bkt, r) table (s12's contract; the paper's own deployment
     * shape — the importance model is fit on reference data, not
-    * refit per shard). One B-bounded parquet file; staleness keyed on
-    * the source fingerprint like every trained-state cache. */
+    * refit per shard). One B-bounded parquet file; rebuilt when the
+    * source data files change, like every persisted layout. */
   def ensureModel(s: SparkSession, d: String, targetLang: String = "en"): String = {
     // v2: the model spans the full bucket domain (train-unseen buckets
     // carry the smoothed ratio) — rebuild models persisted before that.
-    val fp = graft.sources.LocalIndex.fingerprint(Seq(s"$d/documents.parquet")) +
-      s"_b$NumBuckets-$targetLang-v2"
-    graft.sources.LocalIndex.ensure("dsir-model", d, "", fp) { out =>
+    graft.sources.LocalIndex.ensure("dsir-model", d, "",
+        Seq(s"$d/documents.parquet"), s"b$NumBuckets-$targetLang-v2") { out =>
       ratioTable(Tables.documents(s, d), targetLang)
         .coalesce(1).write.mode("overwrite").parquet(out)
     }

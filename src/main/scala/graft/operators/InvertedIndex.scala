@@ -381,44 +381,31 @@ object InvertedIndex {
   val K1 = 1.2
   val B = 0.75
 
-  private final case class TermStats(fp: String, n: Long, sumdl: Long,
+  private final case class TermStats(n: Long, sumdl: Long,
       df: Map[String, Long])
 
   /** Per-corpus BM25 term statistics: N and Σdl from one 1-row
     * aggregate over the corpus' dl column, plus df for EVERY token
-    * from one groupBy(token) count over the posting layout. Keyed by
-    * dir with the documents fingerprint in the VALUE (the
-    * Ann.codebookFor shape): a regenerated or grown corpus recomputes
-    * AND replaces, so a long-lived JVM holds exactly one entry per
-    * corpus dir whatever the number of distinct needles served.
-    * Driver memory is one (token, df Long) entry per distinct corpus
-    * token — 32 on the bench corpus — so it grows with the vocabulary,
-    * never with the number of needles served. */
+    * from one groupBy(token) count over the posting layout (whose
+    * ensure may BUILD the index). Rebuild-on-change: a regenerated or
+    * grown corpus recomputes, so a long-lived JVM holds exactly one
+    * entry per corpus dir whatever the number of distinct needles
+    * served. Driver memory is one (token, df Long) entry per distinct
+    * corpus token — 32 on the bench corpus — so it grows with the
+    * vocabulary, never with the number of needles served. */
   private val termStats =
-    new java.util.concurrent.ConcurrentHashMap[String, TermStats]()
+    new graft.sources.CorpusMemo[TermStats]("documents", growOnly = false)
 
-  private def termStatsFor(s: SparkSession, d: String): TermStats = {
-    // get/recompute/put: the Spark work (two aggregates, and a possible
-    // full index BUILD via ensureIndex) runs OUTSIDE the map lock, like
-    // codebookFor; a duplicate recompute on a race is deterministic and
-    // harmless. The fingerprint is read BEFORE the aggregates, so a
-    // corpus rewritten mid-compute is stored under the old fingerprint
-    // and recomputed on the next request, never served as current.
-    val fp = Ann.trainedKey(d, "documents")
-    val cur = termStats.get(d)
-    if (cur != null && cur.fp == fp) cur
-    else {
+  private def termStatsFor(s: SparkSession, d: String): TermStats =
+    termStats(d) {
       val st = Tables.documents(s, d)
         .select(size(textops.tokens(col("text"))).cast("long").as("dl"))
         .agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")).collect().head
       val df = Tables.loadLayout(s, ensureIndex(s, d))
         .groupBy(col("token")).agg(count(lit(1)).as("df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val v = TermStats(fp, st.getLong(0), st.getLong(1), df)
-      termStats.put(d, v)
-      v
+      TermStats(st.getLong(0), st.getLong(1), df)
     }
-  }
 
   /** (idf by needle term, avgdl) of one needle under a stats entry —
     * pure driver arithmetic. An out-of-vocabulary term has df 0. */
@@ -667,7 +654,7 @@ object InvertedIndex {
   def oracleT9(d: String): String = oracleT9For(d, Needle)
 
   def oracleT9For(d: String, needle: Seq[String]): String = {
-    val (idf, avgdl) = Option(termStats.get(d)).map(idfOf(_, needle))
+    val (idf, avgdl) = termStats.peek(d).map(idfOf(_, needle))
       .getOrElse((needle.map(_ -> 0.0).toMap, 1.0))
     val idfCase = needle.map(t =>
       s"WHEN '$t' THEN ${idf.getOrElse(t, 0.0)}").mkString(" ")

@@ -169,9 +169,8 @@ object Mutation {
 
   private def ensureMutated(s: SparkSession, d: String, kind: String)
                            (mutate: (String, Seq[Long]) => Unit): String = {
-    val fp = graft.sources.LocalIndex.fingerprint(Seq(s"$d/events.parquet")) +
-      s"_v1-b$NumBuckets-k$ForgetKeys"
-    graft.sources.LocalIndex.ensure(kind, d, "", fp) { out =>
+    graft.sources.LocalIndex.ensure(kind, d, "", Seq(s"$d/events.parquet"),
+        s"v1-b$NumBuckets-k$ForgetKeys") { out =>
       val events = Tables.events(s, d)
       buildLayout(events, out)
       mutate(out, forgetSet(events))

@@ -70,33 +70,18 @@ object RpTree {
 
   // ------------------------------------------------------------ train
 
-  /** Per-corpus trained thresholds (internal node → split value).
-    * Keyed by dir + source fingerprint, like a3's codebooks: one JVM
-    * touching two corpora must not mix their trees, and an in-place
-    * regenerated corpus must retrain. Deterministic: thresholds
-    * derive from exact order statistics, so retraining on the same
-    * corpus reproduces the same doubles in any JVM. */
-  private val trees = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[Int, Double])]()
+  private val trees =
+    new graft.sources.CorpusMemo[Map[Int, Double]]("embeddings", growOnly = false)
 
-  // dir-keyed with the source fingerprint in the VALUE (the
-  // Ann.codebookFor shape): an in-place regenerated corpus retrains
-  // AND replaces its entry — fingerprint-in-the-key would leave one
-  // dead entry per regeneration in a long-lived JVM
-  // ...and like codebookFor, the training job runs OUTSIDE the map
-  // lock (get/recompute/put): a multi-level Spark workload inside a
-  // ConcurrentHashMap bin lock is the long-held-lock anti-pattern;
-  // a duplicate recompute on a race is deterministic and harmless.
-  def treeFor(s: SparkSession, d: String): Map[Int, Double] = {
-    val fp = Ann.trainedKey(d, "embeddings")
-    val cur = trees.get(d)
-    if (cur != null && cur._1 == fp) cur._2
-    else {
-      val trained = (fp, train(Tables.embeddings(s, d)))
-      trees.put(d, trained)
-      trained._2
-    }
-  }
+  /** Per-corpus trained thresholds (internal node → split value), one
+    * entry per corpus dir: one JVM touching two corpora must not mix
+    * their trees. Rebuild-on-change: median thresholds move with the
+    * data, so any corpus change (an append included) retrains.
+    * Deterministic: thresholds derive from exact order statistics, so
+    * retraining on the same corpus reproduces the same doubles in any
+    * JVM. */
+  def treeFor(s: SparkSession, d: String): Map[Int, Double] =
+    trees(d)(train(Tables.embeddings(s, d)))
 
   /** Trains each node's threshold as the MIDPOINT of the two order
     * statistics straddling the median split (k-th and (k+1)-th
@@ -273,19 +258,18 @@ object RpTree {
   /** Build/refresh the leaf-partitioned index. Full rebuild on ANY
     * corpus change (see scaladoc: median thresholds move with the
     * data, so shard append is unsound here — Annoy's static-index
-    * contract). The staleness marker carries the TRAINED THRESHOLDS
-    * alongside the corpus fingerprint (a3's ensure carries its
-    * codebook the same way): a training-rule change that moves
-    * thresholds without touching corpus bytes must rebuild too —
-    * otherwise queries would descend the NEW tree while the persisted
-    * assignment still encodes the OLD one, silently mismatching
-    * probes and leaves. */
+    * contract). The layout's `extra` carries the TRAINED THRESHOLDS
+    * (a3's ensure carries its codebook the same way): a training-rule
+    * change that moves thresholds without touching corpus bytes must
+    * rebuild too — otherwise queries would descend the NEW tree while
+    * the persisted assignment still encodes the OLD one, silently
+    * mismatching probes and leaves. */
   def ensureIndex(s: SparkSession, d: String): String = {
     val thr = treeFor(s, d)
     graft.sources.LocalIndex.ensure("rptree-index", d, "_d" + Depth + "m",
-      graft.sources.LocalIndex.fingerprint(Seq(s"$d/embeddings.parquet")) +
-        "#thr:" + thr.toSeq.sorted.map { case (n, t) => s"$n=$t" }
-          .mkString(",")) { path =>
+      Seq(s"$d/embeddings.parquet"),
+      "thr:" + thr.toSeq.sorted.map { case (n, t) => s"$n=$t" }
+        .mkString(",")) { path =>
       assignLeaf(Tables.embeddings(s, d), thr)
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("leaf").parquet(path)
@@ -315,8 +299,7 @@ object RpTree {
     * cached tree: the zero-threshold tree; formal only — a dir whose
     * a4 queries never ran has no result to compare. */
   def oracles(d: String): Map[String, String] = {
-    val thr = Option(trees.get(d)).map(_._2)
-      .getOrElse(Map.empty[Int, Double])
+    val thr = trees.peek(d).getOrElse(Map.empty[Int, Double])
     def t(n: Int): String = thr.getOrElse(n, 0.0).toString
     val stages = (0 until Depth).map { level =>
       val cases = nodesAt(level).map { n =>

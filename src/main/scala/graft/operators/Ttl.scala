@@ -19,7 +19,7 @@ import graft.Tables
   * partitions) filesystem metadata, while the naive `DELETE WHERE` —
   * rewriting the corpus minus old rows — would be a full scan + full
   * write. Surviving files stay byte-identical (asserted in the spec),
-  * so downstream caches and fingerprints remain valid.
+  * so downstream caches and their manifests remain valid.
   *
   * The cutoff is pinned DETERMINISTIC: newest event day − (TTL − 1) —
   * a data-derived "now", so the gate never depends on wall-clock.
@@ -102,9 +102,8 @@ object Ttl {
     * pinned cutoff predicate. */
   def c15Query(s: SparkSession, d: String): DataFrame = {
     val events = Tables.events(s, d)
-    val fp = graft.sources.LocalIndex.fingerprint(Seq(s"$d/events.parquet")) +
-      s"_ttl$TtlDays"
-    val dir = graft.sources.LocalIndex.ensure("ttl", d, "", fp) { out =>
+    val dir = graft.sources.LocalIndex.ensure("ttl", d, "",
+        Seq(s"$d/events.parquet"), s"ttl$TtlDays") { out =>
       buildDailyLayout(events, out)
       applyTtl(out, cutoffFor(events))
       ()

@@ -214,12 +214,11 @@ object VectorSearch {
     * ONCE per (documents, embeddings) corpus state and lands as zstd
     * parquet; every cross-modal query then SCANS the wide row instead
     * of re-running the id join and the 64-hash text embed per query.
-    * Staleness: source-file fingerprint, rebuilt on corpus change
-    * (same contract as the ANN indexes). */
+    * Staleness: rebuilt when either source's data files change
+    * ([[graft.sources.LocalIndex.ensure]]). */
   def ensureCombined(s: SparkSession, d: String): String =
     graft.sources.LocalIndex.ensure("combined", d, "",
-      graft.sources.LocalIndex.fingerprint(
-        Seq(s"$d/documents.parquet", s"$d/embeddings.parquet"))) { path =>
+      Seq(s"$d/documents.parquet", s"$d/embeddings.parquet"), "") { path =>
       ingestWrite(ingestCombine(s, d), path)
     }
 
@@ -251,7 +250,7 @@ object VectorSearch {
     * fewer than the reference's float64. At 100 TB the embedding
     * column dominates scan cost, so this is the difference between
     * scanning 25 TB and 100 TB per brute-force query. Write-once via
-    * the same fingerprinted ensure as the ANN indexes. The scale
+    * the same ensure as the ANN indexes. The scale
     * column is not read by the cosine serve path (cosine is
     * scale-invariant); it is stored so L2/dot serving and exact
     * reconstruction bounds stay possible without re-reading the
@@ -259,7 +258,7 @@ object VectorSearch {
   def ensureQuantized(s: SparkSession, d: String): String = {
     vectors.register(s)
     graft.sources.LocalIndex.ensure("vq-int8", d, "",
-      graft.sources.LocalIndex.fingerprint(Seq(s"$d/embeddings.parquet"))) { path =>
+      Seq(s"$d/embeddings.parquet"), "") { path =>
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
           (array_max(transform(col("embedding"), x => abs(x))).cast("double")

@@ -15,7 +15,7 @@ import graft.functions.textops
   * scan filter instead — pure CPU tax on every scan at 100 TB. This
   * ensure is the sandbox's stand-in for that ingest step: one cached
   * copy of the source table with the sampling hash60s precomputed as
-  * columns, rebuilt only when the source fingerprint moves (the c7 /
+  * columns, rebuilt only when the source's data files change (the c7 /
   * ANN-index lifecycle). The operators themselves keep a computed-hash
   * fallback for raw corpora, so the layout is an optimization, never a
   * requirement — and the hash VALUES are identical either way
@@ -30,8 +30,8 @@ object SampleKeys {
   /** Documents with `smp_text` = hash60(text) (c2's stratum key) and
     * `smp_doc` = hash60(doc_id) (c12's shuffle key) materialized. */
   def documents(s: SparkSession, d: String): DataFrame = {
-    val fp = LocalIndex.fingerprint(Seq(s"$d/documents.parquet")) + "_smp-v1"
-    val dir = LocalIndex.ensure("samplekeys-docs", d, "", fp) { out =>
+    val dir = LocalIndex.ensure("samplekeys-docs", d, "",
+        Seq(s"$d/documents.parquet"), "smp-v1") { out =>
       graft.Spread.ifNarrow(Tables.documents(s, d))
         .withColumn("smp_text", textops.hash60(col("text")))
         .withColumn("smp_doc", textops.hash60(col("doc_id").cast("string")))
@@ -43,8 +43,8 @@ object SampleKeys {
   /** Events with `smp_user` = hash60(user_id) (q66's sampling unit)
     * materialized. */
   def events(s: SparkSession, d: String): DataFrame = {
-    val fp = LocalIndex.fingerprint(Seq(s"$d/events.parquet")) + "_smp-v1"
-    val dir = LocalIndex.ensure("samplekeys-events", d, "", fp) { out =>
+    val dir = LocalIndex.ensure("samplekeys-events", d, "",
+        Seq(s"$d/events.parquet"), "smp-v1") { out =>
       graft.Spread.ifNarrow(Tables.events(s, d))
         .withColumn("smp_user", textops.hash60(col("user_id").cast("string")))
         .write.mode("overwrite").option("compression", "zstd").parquet(out)

@@ -525,7 +525,7 @@ object EventStream {
       .start()
 
   /** s11 gate: a FRESH pre-mutation bucketed layout (not the c20
-    * cache — that one is fingerprint-managed and already post-delete),
+    * cache — that one is manifest-managed and already post-delete),
     * the pinned forget set written as a 2-file request stream (so even
     * the gate run crosses a batch boundary under file-source
     * splitting), [[deleteMaintain]] drains it, then c20's served
@@ -639,7 +639,7 @@ object EventStream {
 
   /** s8 gate: [[upsertMaintain]] over the events parquet arriving as a
     * real file-source stream into a FRESH scratch parts dir (not the
-    * c10 cache — that one is fingerprint-managed by `ensureReplacing`),
+    * c10 cache — that one is manifest-managed by `ensureReplacing`),
     * then the SAME served FINAL report as c10. Batch-split-invariant by
     * construction (pinned by the two-batch suite test), so the c10
     * oracle applies verbatim. */
@@ -660,7 +660,7 @@ object EventStream {
 
   /** s7 gate: [[rollupMaintain]] over the events parquet arriving as a
     * real file-source stream into a FRESH scratch rollup (not the c9
-    * cache — that one is fingerprint-managed by `ensureRollup`), then
+    * cache — that one is manifest-managed by `ensureRollup`), then
     * the SAME served report + exact-verification as c9. Output is
     * batch-split-invariant by construction (pinned by the two-batch
     * suite test), so the c9 oracle applies verbatim. */

@@ -507,4 +507,15 @@ class AnnSpec extends SparkSpec {
     Ann.ivfPqKnn(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(1))) shouldBe basePq
   }
+
+  test("pqCodebookFor keeps its books across a grow-only append") {
+    vectors.register(spark)
+    val full = corpus(400)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqgrow-").toString
+    full.filter(col("vec_id") < 300).write.parquet(s"$dir/embeddings.parquet")
+    val books = Ann.pqCodebookFor(spark, dir)
+    full.filter(col("vec_id") >= 300)
+      .write.mode("append").parquet(s"$dir/embeddings.parquet")
+    Ann.pqCodebookFor(spark, dir) should be theSameInstanceAs books
+  }
 }

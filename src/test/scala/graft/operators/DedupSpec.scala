@@ -657,4 +657,20 @@ class DedupSpec extends SparkSpec {
       g._3 shouldBe e._3 +- 1e-4 // reported score is round(raw, 4)
     }
   }
+
+  test("semAssignerFor re-derives when embeddings.parquet is regenerated in place") {
+    graft.functions.vectors.register(spark)
+    import org.apache.spark.sql.functions.{col, lit, transform}
+    val rnd = new scala.util.Random(4321)
+    val embs = (0 until 200).map(i =>
+        (i.toLong, Seq.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft-semregen-").toString
+    embs.write.parquet(s"$dir/embeddings.parquet")
+    val first = Dedup.semAssignerFor(spark, dir)
+    Dedup.semAssignerFor(spark, dir) should be theSameInstanceAs first
+    embs.withColumn("embedding", transform(col("embedding"), x => x * lit(2.0f)))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    Dedup.semAssignerFor(spark, dir) should not equal first
+  }
 }

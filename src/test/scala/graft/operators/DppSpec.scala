@@ -47,4 +47,19 @@ class DppSpec extends SparkSpec {
     peak should be > 0L
     peak should be < total
   }
+
+  test("peakThreshold re-derives when events.parquet is regenerated in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dpp-regen-").toString
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    raw.write.parquet(s"$dir/events.parquet")
+    val t = Dpp.peakThreshold(spark, dir)
+    Dpp.peakThreshold(spark, dir) shouldBe t
+    // every event twice: each day's count doubles, the day set stays
+    raw.union(raw).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val days = graft.Tables.events(spark, dir)
+      .groupBy(date_trunc("day", col("ts"))).count().collect().map(_.getLong(1))
+    val expected = days.sum / days.length
+    expected should not be t
+    Dpp.peakThreshold(spark, dir) shouldBe expected
+  }
 }

@@ -50,14 +50,14 @@ class LayoutCatalogSpec extends graft.SparkSpec {
     ids(Tables.loadLayout(spark, dir)) shouldBe (0L until 20L)
     // a rebuild that has overwritten the layout when it throws
     intercept[RuntimeException] {
-      LocalIndex.ensure("catalog-spec", src, "", "v2") { out =>
+      LocalIndex.ensure("catalog-spec", src, "", Seq(src), "v2") { out =>
         spark.range(100, 105).toDF("id").write.mode("overwrite").parquet(out)
         throw new RuntimeException("injected build failure")
       }
     }
     LayoutCatalog.generation(dir) shouldBe None
     var builds = 0
-    LocalIndex.ensure("catalog-spec", src, "", "v2") { out =>
+    LocalIndex.ensure("catalog-spec", src, "", Seq(src), "v2") { out =>
       builds += 1
       spark.range(200, 210).toDF("id").write.mode("overwrite").parquet(out)
     }
